@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -33,8 +35,8 @@ object Bench {
       // isolate mode drops every releaseHeavy-managed cache before
       // each query's own warmup anyway — only warm what is retained
       if (sys.env.get("SPARK_GRAFT_ISOLATE").contains("1"))
-        SparkEntry.warmRetained(spark, sfDir)
-      else SparkEntry.warm(spark, sfDir)
+        Substrates.warmRetained(spark, sfDir)
+      else Substrates.warm(spark, sfDir)
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
       // first streaming query pays micro-batch engine + state store
       // init (~2s) — absorb it here with a minimal stateful stream
@@ -45,7 +47,7 @@ object Bench {
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(15000)
       q.stop()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     // a crashing query must not kill the sweep, but it must be
     // LOUD in the metric JSON, not a silent timing: round 6's fixture
     // break made 64 crashed queries read as uniform "0.1 s successes"
@@ -98,7 +100,7 @@ object Bench {
     val (r1, r2) =
       if (isolate) {
         val pairs = benchQueries.map { case (name, fn) =>
-          SparkEntry.releaseHeavy(spark)
+          Substrates.releaseHeavy(spark)
           run1("warmup", name, fn, record = false)
           val a = run1("run1", name, fn, record = true)
           val b = run1("run2", name, fn, record = true)
@@ -176,7 +178,7 @@ object Bench {
       val w = new java.io.PrintWriter(
         sys.env.getOrElse("SPARK_GRAFT_SIDE_CAR", "BENCH_LAST.json"))
       try w.println(sidecarLine) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     println(line)
     spark.stop()
   }

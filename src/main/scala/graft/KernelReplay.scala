@@ -197,8 +197,8 @@ object KernelReplay {
       id % 25 == 0 && id < SparkEntry.PROBE_CAP }
     // trained artifacts SHARED with the engine run (plan literals by
     // scoring time); everything below them is independent scalar code
-    val books = SparkEntry.pqBooks(spark, sfDir)
-    val cents = SparkEntry.trainedCents(spark, sfDir)
+    val books = Substrates.pqBooks(spark, sfDir)
+    val cents = Substrates.trainedCents(spark, sfDir)
     val m = books.length
     val sub = books(0)(0).length
 

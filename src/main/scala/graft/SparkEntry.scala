@@ -7,6 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.signal.{Channels, Signal, Spectrum}
 import graft.datapipe.{Bpe, Clustering, Dedup, Multimodal, Packing, Ranking, Sampling, Sessions, Similarity, Sketches, Skew, TextAnalysis}
 import graft.ops.{Interp, Kernels, Psd}
+import graft.Substrates.{bpeMergeList, dedupComponents, docCount, docShingles, docTermCounts, docs, emb,
+  ev, evUniform, ideFixture, ideWriteFixture, lshCandDocs, lshCands, lshCandsCounted, opqFit, pngs,
+  pqBooks, quantRanges, redactedCorpus, rpqBooks, trainedCents, welchRmsBase}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -29,83 +32,6 @@ object SparkEntry {
   private def cust(s: SparkSession, dir: String) = s.read.parquet(s"$dir/customer.parquet")
   private def nat(s: SparkSession, dir: String) = s.read.parquet(s"$dir/nation.parquet")
   private def reg(s: SparkSession, dir: String) = s.read.parquet(s"$dir/region.parquet")
-  /** True when the table's scan already parallelizes adequately — a
-    * production-shaped table (many files; the v5 fixtures) needs no
-    * substrate repartition, and paying one anyway re-shuffles the
-    * corpus for nothing. A single-FILE fixture (the driver's
-    * testdata) lands in 1-2 byte-range partitions no matter its
-    * row-group count — only there do the substrates below reshape.
-    */
-  private def scanIsParallel(s: SparkSession, df: DataFrame): Boolean =
-    df.rdd.getNumPartitions * 2 >= s.sparkContext.defaultParallelism
-  /** Partition count for reshaping a SINGLE-FILE table: enough to
-    * spread the heavy per-row kernels, but never more than the data
-    * supports. Blindly reshaping a 2,000-row model table to 32
-    * partitions puts ~60 rows in each task, and the per-stage
-    * scheduling overhead (x24 Lloyd stages in one PQ training) costs
-    * more than the parallelism returns at the driver's fixture
-    * scales. Sized from BOTH the measured row count (>=256 rows per
-    * partition — the table is about to be cached anyway, so the
-    * extra count scan is paid once per session) and the file's
-    * compressed bytes (>=512 KB per partition — the long-document
-    * fixture is few rows but hundreds of kB per row, and row count
-    * alone would single-thread its shingle kernels), floored at 2 so
-    * the reshaped path is always exercised, capped at the session's
-    * parallelism.
-    */
-  private def reshapeParts(s: SparkSession, rows: Long, bytes: Long): Int =
-    math.max(2, math.min(s.sparkContext.defaultParallelism.toLong,
-      math.max((rows + 255) / 256, bytes / (512L << 10)))).toInt
-  /** Documents substrate. Production-shaped tables pass through as
-    * the raw scan (pruning/pushdown reach parquet per consumer, no
-    * shuffle). On a single-file fixture the heavy per-doc kernels
-    * (shingling, tokenize regexes) would run at scan parallelism 1:
-    * one round-robin shuffle restores parallelism, and the result is
-    * session-CACHED so the corpus-text shuffle is paid once, not per
-    * substrate build (the r16 bench regression: an uncached
-    * repartition here re-shuffled the full corpus text on every
-    * consumer query — 131.5 s → 155.5 s over the sweep).
-    */
-  private val docsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def docs(s: SparkSession, dir: String) =
-    memo(docsCache, s, dir) {
-      val raw = s.read.parquet(s"$dir/documents.parquet")
-      if (scanIsParallel(s, raw)) raw
-      else raw.repartition(reshapeParts(s, raw.count(),
-        new java.io.File(s"$dir/documents.parquet").length())).cache()
-    }
-  /** Embeddings substrate, session-cached (and repartitioned first if
-    * the scan is single-file-shaped). Two hazards meet here (both
-    * measured on the r16 sf10 gate): (1) the single-file fixture
-    * compresses to ~5 MB, so BYTE-based scan splitting gives 1-2
-    * partitions no matter the row-group count; (2) a bare repartition
-    * is not enough, because Catalyst pushes inferred predicates
-    * (IsNotNull over the interpreted zip_with/aggregate distance
-    * expressions) BELOW the repartition, single-threading the heavy
-    * evaluation on the scan side — the same
-    * substituted-into-inferred-filters failure Dedup.explodedBandKeys
-    * documents for band keys. The memoized cache (the docShingles
-    * precedent) materializes the layout as an InMemoryRelation:
-    * pushdown stops at the cache and every consumer evaluates its
-    * interpreted distance expressions at full parallelism — which is
-    * why the CACHE stays on even for production-shaped tables whose
-    * repartition is skipped (the table is model-sized; its consumers
-    * are the interpreted-expression-heaviest plans in the engine).
-    * Training outputs remain oracle-safe: trained literals are dumped
-    * from the same run, so sub-ulp float-accumulation drift from a
-    * different partition layout cannot split engine and oracle.
-    */
-  private val embCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[graft] def emb(s: SparkSession, dir: String) =
-    memo(embCache, s, dir) {
-      val raw = s.read.parquet(s"$dir/embeddings.parquet")
-      val shaped = if (scanIsParallel(s, raw)) raw
-        else raw.repartition(reshapeParts(s, raw.count(),
-          new java.io.File(s"$dir/embeddings.parquet").length()))
-      shaped.cache()
-    }
 
   /** FIXED evaluation panel for the recall/similarity harnesses:
     * every 25th vector, capped to the base-universe id range. At the
@@ -119,227 +45,13 @@ object SparkEntry {
     */
   private[graft] val PROBE_CAP = 10000000L
   private def probePanel = col("vec_id") % 25 === 0 && col("vec_id") < PROBE_CAP
-  private val evCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Application-end eviction for the shared-table caches below (the
-    * same listener StreamingOps installs for its session clones): a
-    * long-lived process that cycles many sessions must not retain
-    * DataFrames pinning stopped sessions' state. For intra-app
-    * session churn there is no session-closed listener in Spark, so
-    * eviction BETWEEN sessions is an explicit hook: call `release(s)`
-    * when a session's work is done.
-    */
-  private val evictionInstalled =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Unit]
-  private def memo(cache: scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame],
-                   s: SparkSession, dir: String)(mk: => DataFrame): DataFrame =
-    cache.getOrElseUpdate((s, dir), {
-      evictionInstalled.getOrElseUpdate(s, {
-        s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-          override def onApplicationEnd(
-              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = release(s)
-        })
-      })
-      mk
-    })
-
-  /** Drop every intermediate memoized for session `s` and unpersist
-    * the pinned DataFrames — the per-session release hook for
-    * long-lived applications that cycle many sessions (the
-    * application-end listener only covers process shutdown). Safe to
-    * call repeatedly; the memos repopulate on next use.
-    */
-  def release(s: SparkSession): Unit = {
-    Seq(evCache, uniformCache, embCache, docsCache, welchRmsCache, shingleCache, termCountCache,
-        lshCandCache, componentsCache, redactedCache, pngCache).foreach { c =>
-      c.keys.filter(_._1 eq s).foreach { k =>
-        c.remove(k).foreach(df =>
-          try df.unpersist(blocking = false) catch { case _: Throwable => () })
-      }
-    }
-    centsCache.keys.filter(_._1 eq s).foreach(centsCache.remove)
-    // scalar-valued memos: no unpersist needed, but dropping them
-    // releases the stopped session reference and guards against stale
-    // counts/ranges if a fixture dir is regenerated mid-process
-    bpeMergeCache.keys.filter(_._1 eq s).foreach(bpeMergeCache.remove)
-    lshCandDocsCache.keys.filter(_._1 eq s).foreach(lshCandDocsCache.remove)
-    docCountCache.keys.filter(_._1 eq s).foreach(docCountCache.remove)
-    quantRangesCache.keys.filter(_._1 eq s).foreach(quantRangesCache.remove)
-    pqCache.keys.filter(_._1 eq s).foreach(pqCache.remove)
-    ideFixtureCache.keys.filter(_._1 eq s).foreach { k =>
-      ideFixtureCache.remove(k).foreach(p => new java.io.File(p).delete())
-    }
-    evictionInstalled.remove(s)
-  }
-
-  /** Drop the CORPUS-sized memoized intermediates (shingles, LSH
-    * candidates, PNG corpus, redacted corpus, term counts, Welch
-    * base, converged components) but keep the small events substrate
-    * (ev/evUniform) and the scalar trained models. The scale-ladder
-    * bench calls this BETWEEN queries (`SPARK_GRAFT_ISOLATE=1`): at
-    * sf1 the union of every query's by-design session caches crowds
-    * Tungsten execution memory and the sweep measures cache pressure
-    * instead of plans — three rounds of ladder artifacts needed
-    * isolated re-measure prose (q_ivf_topk r13, q_kmeans r13→14,
-    * q_neardup_pairs r14). Each query's own warmup run rebuilds what
-    * it needs; its timed runs then measure the query against ONLY its
-    * own working set.
-    */
-  def releaseHeavy(s: SparkSession): Unit = {
-    // SPARK_GRAFT_KEEP: comma-separated cache names EXEMPT from the
-    // isolate-mode drop. Rebuilding a shared INPUT table (e.g. the
-    // 250M-row sf10 shingle-hash table, ~20 min at 4 cpus) inside
-    // every query's untimed warmup measures nothing — the timed runs
-    // hit the cache either way — so the decade-rung legs keep
-    // `shingles` the way every leg keeps the events projection. The
-    // r14 isolation lesson (don't measure under ACCUMULATED cache
-    // pressure) still holds: keep only bounded shared inputs, never
-    // per-query intermediates.
-    val keep = sys.env.get("SPARK_GRAFT_KEEP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val caches = Seq("welch" -> welchRmsCache, "shingles" -> shingleCache,
-      "terms" -> termCountCache, "lshcands" -> lshCandCache,
-      "components" -> componentsCache, "redacted" -> redactedCache,
-      "pngs" -> pngCache)
-    // a typo'd KEEP name would be silently ignored and the cache
-    // dropped anyway — reintroducing the ~20-min shingle rebuild the
-    // flag exists to avoid, with no diagnostic
-    val known = caches.map(_._1).toSet
-    (keep -- known).foreach(k => System.err.println(
-      s"[graft] WARNING: SPARK_GRAFT_KEEP entry '$k' matches no cache " +
-        s"(known: ${known.toSeq.sorted.mkString(", ")}) — it will be dropped"))
-    caches.foreach { case (name, c) =>
-      if (!keep(name))
-        c.keys.filter(_._1 eq s).foreach { k =>
-          c.remove(k).foreach(df =>
-            try df.unpersist(blocking = true) catch { case _: Throwable => () })
-        }
-    }
-  }
-
-  /** SPARK_GRAFT_NOCACHE=1 disables the events/uniform session caches
-    * so every signal query runs its FULL loader plan (pruned parquet
-    * scan → origin join → projection) instead of an
-    * InMemoryTableScan — the production path a fresh cluster job
-    * executes. Verify/Bench keep the cache (PLANS.md "known accepted
-    * deviations": 50 queries re-scanning the loader would measure
-    * scan amortization, not plans); the r16 uncached campaign runs
-    * the signal tier under this flag to prove no plan silently
-    * depends on the cache.
-    */
-  private val noCache = sys.env.get("SPARK_GRAFT_NOCACHE").contains("1")
-  private def ev(s: SparkSession, dir: String) =
-    if (noCache) Channels.events(s, dir)
-    else memo(evCache, s, dir)(Channels.events(s, dir).cache())
   private def rawEvents(s: SparkSession, dir: String) = Channels.rawEvents(s, dir)
-
-  /** events channels resampled to a uniform 1/3600 Hz grid — the
-    * constant-rate substrate for the samplerate-dependent kernels.
-    * Cached per (session, dir): ten kernel queries share it, so the
-    * resample shuffle runs once per bench/verify session.
-    */
-  private val uniformCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def evUniform(s: SparkSession, dir: String): DataFrame =
-    if (noCache) Interp.resample(ev(s, dir), 1.0 / 3600.0, "linear")
-    else memo(uniformCache, s, dir)(Interp.resample(ev(s, dir), 1.0 / 3600.0, "linear").cache())
-
-  /** The native `.ide` fixture: every uniform channel sunk once per
-    * (session, dir) through [[graft.sources.IdeSink]] at a 1 kHz
-    * frame re-index (the WAV-roundtrip convention), multi-block so
-    * the read path exercises block-group splits and pruning. Channel
-    * ids are assigned in sorted-name order; units derive from the
-    * name so the DuckDB oracle can reproduce them.
-    */
-  /** The DSv2-WRITTEN fixture: the uniform channels, renumbered to
-    * integer ids in sorted-name order, written through
-    * `Ide.write` (cluster-by-ch + (ch, t, sub) sort inserted by the
-    * engine, one rollover file per partition) — what
-    * k_ide_write_roundtrip reads back. Channel names become the
-    * writer's inferred `ch<k>`, which the oracle reproduces with a
-    * dense_rank over the sorted channel names.
-    */
-  private val ideWriteDirCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def ideWriteFixture(s: SparkSession, dir: String): String =
-    ideWriteDirCache.getOrElseUpdate((s, dir), {
-      val names = evUniform(s, dir).select("channel").distinct()
-        .collect().map(_.getString(0)).sorted
-      import s.implicits._
-      val ids = names.zipWithIndex.map { case (n, i) => (n, i) }
-        .toSeq.toDF("channel", "ch")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("channel").orderBy("t")
-      val df = evUniform(s, dir)
-        .withColumn("rn", row_number().over(w))
-        .join(broadcast(ids), Seq("channel"))
-        .select(col("ch"), lit(0).as("sub"),
-          ((col("rn") - 1) / lit(1000.0)).as("t"), col("v").cast("double").as("v"))
-      val d = java.nio.file.Files.createTempDirectory("graft_ide_w").toFile
-      d.deleteOnExit()
-      graft.signal.Ide.write(df, d.getAbsolutePath, timeBaseUs = 1700000000000000L)
-      d.getAbsolutePath
-    })
-
-  private val ideFixtureCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-  private def ideFixture(s: SparkSession, dir: String): String =
-    ideFixtureCache.getOrElseUpdate((s, dir), {
-      val byCh = evUniform(s, dir)
-        .orderBy("channel", "t")
-        .select(col("channel"), col("v").cast("double"))
-        .collect()
-        .groupBy(_.getString(0)).view.mapValues(_.map(_.getDouble(1))).toMap
-      val chans = byCh.keys.toSeq.sorted.zipWithIndex.map { case (name, id) =>
-        graft.sources.IdeSink.Ch(id, name, 1000.0, graft.sources.MideSchema.FmtFloat64,
-          Seq(graft.sources.IdeSink.Sub(name, s"${name}_u")),
-          byCh(name).map(Array(_)), blockFrames = 256)
-      }
-      val f = java.io.File.createTempFile("graft_bench_", ".ide")
-      f.deleteOnExit()
-      graft.sources.IdeSink.write(f.getAbsolutePath, 1700000000000000L, chans)
-      f.getAbsolutePath
-    })
-
-  /** The default Welch sub-PSD table (432000 s hann windows over the
-    * uniform grid), cached per (session, dir): five summarize modes
-    * are pure aggregations over it, so the segment-explode + FFT
-    * pipeline runs once — materialized-intermediate reuse, the batch
-    * analog of a materialized view.
-    */
-  private val welchRmsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def welchRmsBase(s: SparkSession, dir: String): DataFrame =
-    memo(welchRmsCache, s, dir)(Psd.welchAllWithSegRms(evUniform(s, dir), 432000.0).cache())
 
   /** The plain sub-PSD view is the seg_rms table minus one column —
     * derive it instead of materializing the FFT pipeline twice.
     */
   private def welchBase(s: SparkSession, dir: String): DataFrame =
     welchRmsBase(s, dir).drop("seg_rms")
-
-  /** Document shingle hashes (doc_id, h1, h2), cached per (session,
-    * dir): minhash, LSH and Jaccard all start from this table, so the
-    * normalize/explode/md5 work happens once.
-    */
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def docShingles(s: SparkSession, dir: String): DataFrame =
-    memo(shingleCache, s, dir)(
-      Dedup.shingleHashes(Dedup.shingles(docs(s, dir), distinct = false)).cache())
-
-  /** The real-PNG media corpus, cached per (session, dir): the pixel
-    * aHash and the executed-resize queries decode the identical
-    * payloads — encoding the corpus once is the same
-    * materialized-intermediate reasoning as docShingles (and at
-    * production scale the bytes column is a table, not an encode).
-    */
-  private val pngCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def pngs(s: SparkSession, dir: String): DataFrame =
-    memo(pngCache, s, dir)(Multimodal.syntheticPngs(docs(s, dir)).cache())
 
   /** Decoded pixel-aHash table over the PNG corpus, built FRESH per
     * call (the r18 cross-run memo made the consumer's bench number a
@@ -353,32 +65,6 @@ object SparkEntry {
     Multimodal.pixelPhash(pngs(s, dir))
       .select(col("media_id"), col("phash")).localCheckpoint(false)
 
-  /** LSH candidate pairs over the shared shingle table, cached per
-    * (session, dir): the near-dup count query and the
-    * connected-components query both consume the identical candidate
-    * list — same materialized-intermediate reasoning as docShingles.
-    * The cache stores the COUNTED form (a, b, n_bands) — same shuffle
-    * as the distinct form, and the collision count is the free
-    * similarity evidence the bounded top-k surface ranks by; the
-    * 2-column view every other consumer reads is a projection.
-    */
-  private val lshCandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def lshCandsCounted(s: SparkSession, dir: String): DataFrame =
-    memo(lshCandCache, s, dir)(
-      Dedup.lshCandidatesCounted(
-        Dedup.minhashSignaturesFromHashes(docShingles(s, dir), k = 16),
-        rowsPerBand = 4).cache())
-  private def lshCands(s: SparkSession, dir: String): DataFrame =
-    lshCandsCounted(s, dir).select("a", "b")
-
-  /** Candidate-touched doc count of the shared LSH candidate table,
-    * memoized per (session, dir): the Jaccard-verify join-strategy
-    * gate needs this ONE number, and round 6 re-aggregated it at
-    * every verify query's plan-build (3x per bench sweep, ~2x wall
-    * time on q_containment/q_neardup_pairs). Count once per shared
-    * table, hand the hint to every verifier of that table.
-    */
   /** Per-doc sorted distinct-shingle arrays for the candidate-touched
     * docs of the SHARED LSH candidate table (Dedup.candidateSets),
     * built FRESH per call (the r18 cross-run memo made the pair-verify
@@ -392,25 +78,11 @@ object SparkEntry {
     Dedup.candidateSets(docShingles(s, dir), lshCands(s, dir),
       neededDocsHint = Some(lshCandDocs(s, dir))).localCheckpoint(false)
 
-  private val lshCandDocsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  private def lshCandDocs(s: SparkSession, dir: String): Long =
-    lshCandDocsCache.getOrElseUpdate((s, dir), {
-      val c = lshCands(s, dir)
-      c.select(col("a")).union(c.select(col("b"))).distinct().count()
-    })
-
-  /** Corpus row count, memoized per (session, dir) — a conservative
-    * UPPER bound on candidate-touched docs for verify stages whose
-    * pair list is query-specific (q_ngram_jaccard): an upper bound
-    * can only flip the gate toward the shuffle join, never force an
-    * oversized broadcast, so it is always safe to pass.
-    */
   /** Per-round CC convergence/timing trace on stderr, opt-in via
     * GRAFT_CC_VERBOSE=1 — the tuning dial for maxIters and the
     * flat-per-round-wall-time check, without a code edit.
     */
-  private def ccVerbose: Boolean = sys.env.contains("GRAFT_CC_VERBOSE")
+  private[graft] def ccVerbose: Boolean = sys.env.contains("GRAFT_CC_VERBOSE")
 
   /** BROADCAST benchmark shingle-hash set (distinct h1 of the doc_id
     * % 97 == 0 eval slice), built FRESH per call — collecting the
@@ -447,90 +119,14 @@ object SparkEntry {
       .select(col("query_id"), col("neighbor_id")).localCheckpoint(false)
   }
 
-  private val docCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-  private def docCount(s: SparkSession, dir: String): Long =
-    docCountCache.getOrElseUpdate((s, dir), docs(s, dir).count())
-
-  /** Trained int8-quantization ranges (per-dimension min/max over the
-    * embedding table), memoized per (session, dir) — train once,
-    * encode many, the same pattern as the IVF centroids; 2·64 doubles
-    * on the driver.
-    */
-  private val quantRangesCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[(Double, Double)]]
-  private def quantRanges(s: SparkSession, dir: String): Array[(Double, Double)] =
-    quantRangesCache.getOrElseUpdate((s, dir),
-      Similarity.dimRanges(emb(s, dir), dims = 64))
-
-  /** Trained PQ codebooks (m=4 sub-spaces x k=16 centroids over the
-    * 64-dim embeddings, 2 Lloyd iterations per sub-quantizer),
-    * memoized per (session, dir) — train once, encode/search many;
-    * k*dims doubles on the driver, same payload as one flat k-means.
+  /** PQ training budget shared by the trained codebook substrates
+    * (Substrates.pqBooks/rpqBooks/opqFit) and the queries that
+    * encode and search with them.
     */
   private[graft] val PQ_M = 8
   private[graft] val PQ_SUB = 8 // 64 / PQ_M
   private[graft] val PQ_K = 32
   private[graft] val PQ_ITERS = 3
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Array[Array[Double]]]]
-  private[graft] def pqBooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    pqCache.getOrElseUpdate((s, dir),
-      Similarity.pqCodebooks(emb(s, dir), m = PQ_M, k = PQ_K, iters = PQ_ITERS, dims = 64))
-
-  /** RESIDUAL PQ codebooks (FAISS IndexIVFPQ): same m/k/iters budget,
-    * but trained on x − c(list) against the TRAINED coarse quantizer —
-    * memoized per (session, dir) like the raw fit.
-    */
-  private val rpqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Array[Array[Array[Double]]]]
-  private def rpqBooks(s: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    rpqCache.getOrElseUpdate((s, dir),
-      Similarity.residualPqCodebooks(emb(s, dir), trainedCents(s, dir),
-        m = PQ_M, k = PQ_K, iters = PQ_ITERS, dims = 64))
-
-  /** OPQ rotation + codebooks over the residual table (FAISS
-    * OPQMatrix-before-IndexIVFPQ): same m/k/iters budget as the
-    * residual fit plus the learned orthogonal rotation — memoized per
-    * (session, dir); the extra driver payload is one dims×dims
-    * matrix.
-    */
-  private val opqCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Array[Array[Double]], Array[Array[Array[Double]]])]
-  private def opqFit(s: SparkSession, dir: String)
-      : (Array[Array[Double]], Array[Array[Array[Double]]]) =
-    opqCache.getOrElseUpdate((s, dir),
-      Similarity.opqResidualTrain(emb(s, dir), trainedCents(s, dir),
-        m = PQ_M, k = PQ_K, iters = PQ_ITERS, dims = 64, alternations = 3))
-
-  /** The trained BPE merge list, collected once per (session, dir):
-    * the encode and token-count queries both replay it, and training
-    * is the expensive sequential part (one driver top-1 per round).
-    */
-  private val bpeMergeCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Seq[(String, String)]]
-  private def bpeMergeList(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergeCache.getOrElseUpdate((s, dir),
-      Bpe.merges(docTermCounts(s, dir), rounds = BPE_ROUNDS)
-        .orderBy("round").collect().map(r => (r.getString(1), r.getString(2))).toSeq)
-
-  /** The PII-scrubbed corpus (benchmark holdout removed, synthetic
-    * PII injected then redacted), cached per (session, dir): the
-    * curation pipeline's quality gate, repetition gate and mixture
-    * decision all read this ONE text projection — the scrub regexes
-    * run once, not once per consumer (the composition hazard the
-    * shared-shingle memo already guards against for dedup).
-    */
-  private val redactedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def redactedCorpus(s: SparkSession, dir: String): DataFrame =
-    memo(redactedCache, s, dir)(
-      TextAnalysis.redactPii(
-          piiInjected(docs(s, dir).filter(col("doc_id") % 97 =!= 0)),
-          keep = Seq("lang"))
-        .select(col("doc_id"), col("lang"),
-          (col("n_email") + col("n_ip") + col("n_num")).cast("long").as("n_pii"),
-          col("redacted")).cache())
 
   /** Target training-mix weights (parts per group) — shared by the
     * standalone q_mix_resample and the composed curation pipeline so
@@ -567,7 +163,7 @@ object SparkEntry {
         (col("doc_id") % 200 + 1).cast("string"),
         lit(".7 acct 90210"), col("doc_id").cast("string"), lit("1 done")))
       .otherwise(col("text"))
-  private def piiInjected(d: DataFrame): DataFrame =
+  private[graft] def piiInjected(d: DataFrame): DataFrame =
     d.select(col("doc_id"), col("lang"), piiInjectExpr.as("text"))
 
   /** Degenerate dedup fixture: the first 10 documents plus 50 clones
@@ -582,19 +178,6 @@ object SparkEntry {
         .select(explode(sequence(lit(1000L), lit(1049L))).as("doc_id"), col("text")))
   }
 
-  /** Near-dup components over the shared candidate list, cached per
-    * (session, dir) — the compute-once/read-many split a production
-    * pipeline uses: q_dedup_keep (and any other consumer) reads this
-    * memoized table, while q_dedup_components deliberately bypasses
-    * it so the bench always times the real fixpoint iteration.
-    */
-  private val componentsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def dedupComponents(s: SparkSession, dir: String): DataFrame =
-    memo(componentsCache, s, dir)(
-      Dedup.connectedComponents(lshCands(s, dir), maxIters = CC_ORACLE_ROUNDS,
-        verbose = ccVerbose).cache())
-
   /** Test hook: run connected components FRESH on this dir's real
     * candidate graph and return (labels, rounds-to-converge). Unlike
     * reading `Dedup.lastCcRounds` after a memoized query, the round
@@ -603,19 +186,6 @@ object SparkEntry {
     */
   private[graft] def ccConvergence(s: SparkSession, dir: String): (DataFrame, Int) =
     Dedup.connectedComponentsCounted(lshCands(s, dir), maxIters = CC_ORACLE_ROUNDS)
-
-  /** Trained IVF quantizer (k=16, 2 Lloyd iterations over the
-    * embedding table), memoized per (session, dir): the trained
-    * search, the occupancy diagnostic, and the probe sweep all
-    * consume the SAME fit — train-once/search-many, the production
-    * pattern (and 2 corpus passes instead of 6 per verify/bench
-    * session). Driver-side k·dims doubles, so the cache is tiny.
-    */
-  private val centsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Array[Double]]]
-  private[graft] def trainedCents(s: SparkSession, dir: String): Array[Array[Double]] =
-    centsCache.getOrElseUpdate((s, dir),
-      Clustering.kmeansCentroids(emb(s, dir), k = 16, iters = 2, dims = 64))
 
   /** The corpus LSH band table persisted through the session catalog
     * (spark-warehouse) as a table BUCKETED BY (band, sig) — the
@@ -707,43 +277,6 @@ object SparkEntry {
       sigs.unpersist(blocking = false)
       (bName, cName)
     })
-
-  /** Per-(doc, term) frequency table, cached per (session, dir): the
-    * TF-IDF and BM25 queries both branch from it several times (tf
-    * side, docFreq side, doc-length side), and Spark won't share the
-    * tokenize/explode lineage across branches — materializing it runs
-    * the corpus tokenization exactly once.
-    */
-  private val termCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def docTermCounts(s: SparkSession, dir: String): DataFrame =
-    memo(termCountCache, s, dir)(Ranking.termCounts(docs(s, dir)).cache())
-
-  /** Untimed warm-up for Bench: materialize the shared cached inputs
-    * (events projection, uniform resample, Welch sub-PSD tables,
-    * document shingles, term counts) so no measured query absorbs a
-    * cache fill that several others reuse.
-    */
-  def warm(s: SparkSession, dir: String): Unit = {
-    warmRetained(s, dir)
-    welchRmsBase(s, dir).count()
-    docShingles(s, dir).count()
-    docTermCounts(s, dir).count()
-    pngs(s, dir).count()
-    lshCands(s, dir).count()
-  }
-
-  /** Isolate-mode warm-up: ONLY the caches `releaseHeavy` retains
-    * (the events projection and its uniform resample). Everything
-    * else `warm` builds is dropped again before the first measured
-    * query even starts, so building it is pure waste — and at the
-    * sf10 decade rung that waste was ~10 min of synthetic-PNG
-    * encoding for a subset with no media query in it.
-    */
-  def warmRetained(s: SparkSession, dir: String): Unit = {
-    ev(s, dir).count()
-    evUniform(s, dir).count()
-  }
 
   /** The DuckDB view of the same channel model (µs-exact). */
   private val SRC =
@@ -2193,7 +1726,11 @@ object SparkEntry {
             if (hits * 10 >= set.size) 1 else 0)
         }
         .toDF("doc_id", "n_shingles", "hits", "overlap", "contaminated")
-      runToMemorySink(flagged, "stream_decontaminate", "append")
+      // the sink drains the stream before returning, so the blocklist
+      // is dead once it does — destroy it instead of leaking one
+      // broadcast per call
+      try runToMemorySink(flagged, "stream_decontaminate", "append")
+      finally benchSet.destroy()
     }),
     "q_stream_curate" -> ((s, dir) => {
       // the FULL admission pipeline ON THE STREAM: every arriving
@@ -2285,7 +1822,8 @@ object SparkEntry {
         qOk.as("quality_ok"), col("rep_ok"), col("mix_admitted"),
         (col("contaminated") === 0 && keepC && qOk && col("rep_ok") &&
           col("mix_admitted")).as("admitted"))
-      runToMemorySink(out, "stream_curate", "complete")
+      try runToMemorySink(out, "stream_curate", "complete")
+      finally benchSet.destroy()
     }),
     "q_movrms_time" -> ((s, dir) =>
       // raw doubles, no output rounding: the quantized accumulation
@@ -4784,7 +4322,7 @@ object SparkEntry {
     * exactly as in the CC oracle: each level references its
     * predecessor twice and the winner once.
     */
-  private val BPE_ROUNDS = 8
+  private[graft] val BPE_ROUNDS = 8
 
   /** The shared CTE chain `v0..v{BPE_ROUNDS}` replaying merge
     * training; `b1..bN` are the per-round winners. Reused by the

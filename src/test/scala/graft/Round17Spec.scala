@@ -187,9 +187,9 @@ class Round17Spec extends AnyFunSuite {
     // and reshape+cache only the single-file one (r16 verdict #5).
     val dir = Files.createTempDirectory("r17_shape_").toString
     GenScale.generate(spark, "/root/testdata/sf0.001", dir, 2)
-    SparkEntry.release(spark) // drop any memoized substrate for other dirs
+    Substrates.release(spark) // drop any memoized substrate for other dirs
 
-    val multi = SparkEntry.docs(spark, dir)
+    val multi = Substrates.docs(spark, dir)
     val multiPlan = multi.queryExecution.executedPlan.toString
     assert(!multiPlan.contains("Exchange") && !multiPlan.contains("InMemoryRelation"),
       s"multi-file docs substrate must be the raw scan, got:\n$multiPlan")
@@ -200,7 +200,7 @@ class Round17Spec extends AnyFunSuite {
            pushed.contains("PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]"),
       s"filter must push to the scan on the raw substrate, got:\n$pushed")
 
-    val single = SparkEntry.docs(spark, "/root/testdata/sf0.001")
+    val single = Substrates.docs(spark, "/root/testdata/sf0.001")
     val singlePlan = single.queryExecution.optimizedPlan.toString
     assert(singlePlan.contains("InMemoryRelation"),
       s"single-file docs substrate must be session-cached, got:\n$singlePlan")
@@ -212,9 +212,9 @@ class Round17Spec extends AnyFunSuite {
       s"single-file substrate must be reshaped to a data-sized partition " +
         s"count, got ${single.rdd.getNumPartitions}")
     // identical content either way (same source rows)
-    assert(SparkEntry.docs(spark, "/root/testdata/sf0.001").count() * 2 ==
+    assert(Substrates.docs(spark, "/root/testdata/sf0.001").count() * 2 ==
       multi.count(), "2x clone must hold exactly twice the docs")
-    SparkEntry.release(spark)
+    Substrates.release(spark)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

@@ -277,7 +277,7 @@ class Round18Spec extends AnyFunSuite {
     assert(single.nonEmpty, "admission stream produced no decisions")
     assert(multi == single,
       "directory-layout streaming decisions diverge from single-file")
-    SparkEntry.release(spark)
+    Substrates.release(spark)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }
