@@ -83,7 +83,7 @@ object Bench {
              record: Boolean): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
-        case e: Throwable =>
+        case NonFatal(e) =>
           if (record) errors.getOrElseUpdate(name, e.getClass.getSimpleName)
           System.err.println(
             s"[bench:$label] $name FAILED ${e.getClass.getName}: ${e.getMessage}")

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** 30-second self-check: run EVERY declared query end-to-end at the
@@ -21,7 +23,7 @@ object Smoke {
           verbose: Boolean = false): Seq[(String, Throwable)] =
     SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       val r = try { fn(spark, sfDir).count(); None } catch {
-        case e: Throwable => Some(name -> e)
+        case NonFatal(e) => Some(name -> e)
       }
       if (verbose) System.err.println(
         s"[smoke] $name ${if (r.isEmpty) "ok" else "FAILED " + r.get._2.getMessage}")

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -53,7 +54,7 @@ object Verify {
         System.err.println(
           f"[verify] $name done in ${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         errors(name) = s"${e.getClass.getName}: ${e.getMessage}"
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -109,14 +109,23 @@ object CubicSpline {
     * n=2 falls back to linear, n=3 to the exact parabola (what
     * not-a-knot degenerates to).
     */
-  def interpolate(x: Array[Double], y: Array[Double], q: Array[Double]): Array[Double] = {
+  def interpolate(x: Array[Double], y: Array[Double], q: Array[Double]): Array[Double] =
+    q.map(interpolator(x, y))
+
+  /** The spline through (x, y) as a function of one query point: the
+    * tridiagonal solve runs once, then each query costs a binary search
+    * and one cubic — so a caller can stream a long query grid without
+    * holding it. Same values and the same range and NaN contract as
+    * `interpolate`.
+    */
+  def interpolator(x: Array[Double], y: Array[Double]): Double => Double = {
     val n = x.length
     require(n >= 2, "need >= 2 points")
-    if (n == 2) return SigMath.interp1d(x, y, q, "linear")
+    if (n == 2) return xx => SigMath.interp1d(x, y, Array(xx), "linear")(0)
     if (n == 3) {
       // exact parabola through three points (Lagrange); same bounds
       // and NaN contract as the other branches
-      return q.map { xx =>
+      return { xx =>
         if (xx.isNaN) Double.NaN
         else if (xx < x(0) || xx > x(2))
           throw new IllegalArgumentException(
@@ -128,7 +137,7 @@ object CubicSpline {
       }
     }
     val s = derivatives(x, y)
-    q.map { xx =>
+    xx =>
       if (xx.isNaN) Double.NaN
       else if (xx < x(0) || xx > x(n - 1))
         throw new IllegalArgumentException(
@@ -147,6 +156,5 @@ object CubicSpline {
           ((c0 * d + c1) * d + s(lo)) * d + y(lo)
         }
       }
-    }
   }
 }

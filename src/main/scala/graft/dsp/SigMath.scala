@@ -11,10 +11,12 @@ object SigMath {
     * variability tolerance and snap-to-integer behavior — a literal
     * port of `extension.py:273-300` including its quirk: because
     * max_sr = 1/max(diff) <= min_sr = 1/min(diff), sr_error is never
-    * positive, so the variable-rate None branch only fires on NaN
-    * (e.g. < 2 samples); jittered signals still yield the mean rate.
-    * (The reference's own None path would crash at `extension.py:297`;
-    * we return None instead of raising.)
+    * positive, so the variable-rate None branch only fires on a NaN
+    * interval (a NaN timestamp, whose NaN maximum makes
+    * `Signal.samplerate`'s sr_error NaN too) or on < 2 samples;
+    * jittered signals still yield the mean rate. (The reference's own
+    * None path would crash at `extension.py:297`; we return None
+    * instead of raising.)
     */
   def samplerate(t: Array[Double]): Option[Double] = {
     if (t.length < 2) return None
@@ -24,6 +26,7 @@ object SigMath {
     var i = 1
     while (i < t.length) {
       val d = t(i) - t(i - 1)
+      if (d.isNaN) return None
       if (d < mn) mn = d
       if (d > mx) mx = d
       sum += d

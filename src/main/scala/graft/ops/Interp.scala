@@ -283,14 +283,52 @@ object Interp {
 
   /** Uniform-rate resample (`extension.py:853-894`): per channel,
     * np.arange(t0, tEnd, 1/sampleRate) — half-open, excluding tEnd —
-    * generated distributively with sequence+explode, then as-of
-    * interpolation. The grid is in-range by construction, matching the
-    * reference's bounds_error-free path.
+    * then interpolation at the grid. The grid is in-range by
+    * construction, matching the reference's bounds_error-free path;
+    * a grid point that rounds past the last sample reads NULL.
+    *
+    * The cubic kind runs `PerChannel.fitsOneTask`'s counted gate (one
+    * eager job). At or below [[PerChannel.GatherMaxSamples]] samples
+    * per channel it gathers each channel and solves one whole-channel
+    * spline, streaming the grid (`resampleCubicGathered`); above it the
+    * grid is generated distributively with sequence+explode and fed to
+    * the chunk-parallel `interp1dSpline`. The two agree bit for bit on
+    * channels of at most its `chunkKnots` samples, and within its
+    * chunk-margin bound beyond. The other kinds always take the grid
+    * plan.
     */
-  def resample(src: DataFrame, sampleRate: Double, kind: String = "linear"): DataFrame = {
+  def resample(src: DataFrame, sampleRate: Double, kind: String = "linear"): DataFrame =
+    resample(src, sampleRate, kind, PerChannel.GatherMaxSamples)
+
+  private[graft] def resample(src: DataFrame, sampleRate: Double, kind: String,
+                              maxSamples: Long): DataFrame = {
     val step = 1.0 / sampleRate
-    val grid = resampleGrid(src, step)
-    interp1d(src, grid, kind)
+    if (kind == "cubic" && PerChannel.fitsOneTask(src, maxSamples))
+      resampleCubicGathered(src, step)
+    else interp1d(src, resampleGrid(src, step), kind)
+  }
+
+  /** The cubic resample on each channel's gathered arrays: the grid is
+    * `resampleGrid`'s (t0 + k*step for k < ceil((t1 - t0)/step)), and
+    * every grid point outside [t0, t1] reads NULL, as in
+    * `interp1dSpline`.
+    */
+  private def resampleCubicGathered(src: DataFrame, step: Double): DataFrame = {
+    val spark = src.sparkSession
+    import spark.implicits._
+    PerChannel.transform[(String, Double, Option[Double])](src) { (ch, ts, vs) =>
+      val t0 = ts(0)
+      val t1 = ts(ts.length - 1)
+      val n = math.ceil((t1 - t0) / step).toLong
+      if (n <= 0) Iterator.empty
+      else {
+        val spline = graft.dsp.CubicSpline.interpolator(ts, vs)
+        (0L until n).iterator.map { k =>
+          val t = t0 + k * step
+          (ch, t, if (t < t0 || t > t1) None else Some(spline(t)))
+        }
+      }
+    }.toDF("channel", "t", "v")
   }
 
   /** The np.arange grid as a DataFrame (channel, t), generated in TWO

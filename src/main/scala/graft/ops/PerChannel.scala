@@ -11,11 +11,43 @@ import scala.collection.mutable.ArrayBuilder
   * spill-friendly secondary-sort idiom: Spark's external sorter does
   * the ordering (can spill to disk), and `mapPartitions` then streams
   * the rows, slicing consecutive same-channel runs into arrays. One
-  * task processes many channels; one channel must fit in task memory
-  * (v1 contract; the parallel linear-recurrence scan over chunks is
-  * the documented v2 path for single giant channels).
+  * task processes many channels; one channel must fit in task memory.
+  *
+  * Operators that also have a plan for channels too large for one
+  * task (Welch's per-segment FFTs, the time-window mov_rms, the
+  * chunked cubic resample) choose between the two with the counted
+  * gate `fitsOneTask`: one `groupBy(channel).count()` aggregate,
+  * checked against [[GatherMaxSamples]]. At or below it the channel is
+  * gathered here and the single-threaded `graft.dsp` kernel runs on
+  * its arrays; above it the operator keeps its multi-stage plan.
   */
 object PerChannel {
+
+  /** The most samples a channel may have and still be gathered into
+    * one task by the gated operators (`Psd.welchAllWithSegRms`,
+    * `Signal.movRms`, `Interp.resample(..., "cubic")`). Sized from the
+    * gathered arrays' memory: `transform` holds t and v as doubles
+    * (16 B/sample, up to 48 B while the array builders double and
+    * copy), and the largest kernel scratch is the cubic spline's
+    * tridiagonal solve, nine doubles per knot (72 B). About 120 B per
+    * sample is 120 MiB per task at 2^20 samples, so four concurrent
+    * tasks stay within a 2 GiB heap. Longer channels take the
+    * operators' spill-capable window plans.
+    */
+  val GatherMaxSamples: Long = 1L << 20
+
+  /** The counted gate: true when no channel of `df` has more than
+    * `maxSamples` rows. Runs eagerly, when the operator is built — one
+    * group-by-channel count, as an RDD `reduceByKey` so it is a single
+    * job of two stages (the DataFrame form runs as two jobs under
+    * adaptive execution, its map stage and its result stage).
+    */
+  private[graft] def fitsOneTask(df: DataFrame, maxSamples: Long): Boolean =
+    df.select(org.apache.spark.sql.functions.col("channel").cast("string")).rdd
+      .map(r => (r.getString(0), 1L))
+      .reduceByKey(_ + _)
+      .filter(_._2 > maxSamples)
+      .count() == 0
 
   case class Sample(channel: String, t: Double, v: Double)
 

@@ -3,24 +3,32 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.dsp.Spectral
+import graft.dsp.{SigMath, Spectral}
 
 /** Distributed spectral estimation (reference `extension.py:569-625`,
   * `tools.py:13-100`).
   *
-  * Welch's method is "mean of modified periodograms" — literally a
-  * partial/final aggregation, so the Spark-first shape is:
+  * Welch's method is "mean of modified periodograms" — a partial/final
+  * aggregation. Every Welch entry point (`welchAll`, `welch`, `getPsd`
+  * with a window) builds its sub-PSD table in `welchAllWithSegRms`,
+  * which picks one of two plans with `PerChannel.fitsOneTask`, a
+  * counted gate on the largest channel:
   *
-  *   1. per-channel params (sample rate, window/overlap sizes) — one
-  *      small aggregate, broadcast back;
-  *   2. assign each sample to its overlapping segment ids with
-  *      explode(sequence(...)) — the batch analog of sliding windows,
-  *      duplicating data only by the overlap factor (2x at 0.5);
-  *   3. one FFT task per (channel, segment) — parallelism scales with
-  *      segments, not channels;
-  *   4. summarize = groupBy(channel, freq) aggregates (mean/median/
-  *      max/min) or a two-level aggregate for the 'max rms'/'damage'
-  *      rescale modes.
+  *  - at or below [[PerChannel.GatherMaxSamples]] samples per channel,
+  *    one channel gather: each channel's arrays are sliced with
+  *    `Spectral.welchStarts` and every segment runs
+  *    `Spectral.periodogram` in the same task;
+  *  - above it, the segmented plan, whose parallelism scales with
+  *    segments, not channels: per-channel params (sample rate,
+  *    window/overlap sizes) from one small aggregate broadcast back,
+  *    each sample assigned to its overlapping segment ids with
+  *    explode(sequence(...)) (duplicating data only by the overlap
+  *    factor), and one FFT task per (channel, segment).
+  *
+  * Both emit the same (channel, w, freq, p, seg_rms) rows bit for bit.
+  * The summarize stage is groupBy(channel, freq) aggregates
+  * (mean/median/max/min) or a two-level aggregate for the
+  * 'max rms'/'damage' rescale modes, on either plan.
   */
 object Psd {
 
@@ -90,9 +98,8 @@ object Psd {
     }.toDF("channel", "freq", "p")
   }
 
-  /** Welch sub-PSDs, distributed over (channel, segment). Returns
-    * (channel, w, freq, p) — the summarize='all' shape
-    * (`tools.py:83-84`).
+  /** Welch sub-PSDs. Returns (channel, w, freq, p) — the
+    * summarize='all' shape (`tools.py:83-84`).
     */
   def welchAll(df: DataFrame, windowLength: Double, overlap: Double = 0.5,
                windowType: String = "hann", detrend: String = "constant"): DataFrame =
@@ -105,10 +112,61 @@ object Psd {
     * trapezoid RMS (`tools.py:85-90`'s per-window rms list), computed
     * inside the FFT task — so the rescale summarize modes need ONE
     * pass over the data instead of re-running the segment pipeline
-    * for the sub-RMS branch.
+    * for the sub-RMS branch. Runs the counted channel-size gate (one
+    * eager job) to choose the gathered or the segmented plan.
     */
   def welchAllWithSegRms(df: DataFrame, windowLength: Double, overlap: Double = 0.5,
-                         windowType: String = "hann", detrend: String = "constant"): DataFrame = {
+                         windowType: String = "hann", detrend: String = "constant"): DataFrame =
+    welchAllWithSegRms(df, windowLength, overlap, windowType, detrend,
+      PerChannel.GatherMaxSamples)
+
+  private[graft] def welchAllWithSegRms(df: DataFrame, windowLength: Double, overlap: Double,
+                                        windowType: String, detrend: String,
+                                        maxSamples: Long): DataFrame =
+    if (PerChannel.fitsOneTask(df, maxSamples))
+      welchGathered(df, windowLength, overlap, windowType, detrend)
+    else welchSegmented(df, windowLength, overlap, windowType, detrend)
+
+  /** sqrt of the segment PSD's trapezoid integral, the seg_rms column. */
+  private def segRmsOf(f: Array[Double], p: Array[Double]): Double = {
+    var trapz = 0.0
+    var j = 1
+    while (j < f.length) { trapz += (p(j) + p(j - 1)) / 2.0 * (f(j) - f(j - 1)); j += 1 }
+    math.sqrt(trapz)
+  }
+
+  /** The sub-PSD table from one gather per channel. The parameters
+    * repeat `withParams`'s arithmetic: `SigMath.samplerate` is
+    * `Signal.samplerate`'s sequential mean interval, the int cast
+    * truncates, and `math.rint` is `bround`'s half-even rounding.
+    */
+  private def welchGathered(df: DataFrame, windowLength: Double, overlap: Double,
+                            windowType: String, detrend: String): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    PerChannel.transform[PsdRmsRow](df) { (ch, ts, vs) =>
+      // one sample has no interval and so no sample rate: the
+      // segmented plan's inner join with the params drops the channel
+      if (ts.length < 2) Iterator.empty
+      else {
+        val sr = SigMath.samplerate(ts).getOrElse(throw new IllegalStateException(
+          s"channel '$ch' has a variable sample rate; resample() it before PSD"))
+        val nWindow = (sr * windowLength).toInt
+        val nOverlap = math.rint(nWindow * overlap).toInt
+        Spectral.welchStarts(vs.length, nWindow, nOverlap).iterator.zipWithIndex.flatMap {
+          case (start, w) =>
+            val seg = java.util.Arrays.copyOfRange(vs, start, start + nWindow)
+            val (f, p) = Spectral.periodogram(seg, sr, windowType, detrend)
+            val segRms = segRmsOf(f, p)
+            Iterator.tabulate(f.length)(i => PsdRmsRow(ch, w.toLong, f(i), p(i), segRms))
+        }
+      }
+    }.toDF("channel", "w", "freq", "p", "seg_rms")
+  }
+
+  /** The sub-PSD table distributed over (channel, segment). */
+  private def welchSegmented(df: DataFrame, windowLength: Double, overlap: Double,
+                             windowType: String, detrend: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val prepared = segmented(df, windowLength, overlap)
@@ -121,10 +179,7 @@ object Psd {
       var i = 0
       while (i < buf.length) { vs(buf(i).idx.toInt) = buf(i).v; i += 1 }
       val (f, p) = Spectral.periodogram(vs, sr, windowType, detrend)
-      var trapz = 0.0
-      var j = 1
-      while (j < f.length) { trapz += (p(j) + p(j - 1)) / 2.0 * (f(j) - f(j - 1)); j += 1 }
-      val segRms = math.sqrt(trapz)
+      val segRms = segRmsOf(f, p)
       Iterator.tabulate(f.length)(i => PsdRmsRow(ch, w, f(i), p(i), segRms))
     }.toDF("channel", "w", "freq", "p", "seg_rms")
   }

@@ -127,9 +127,67 @@ final case class Signal(df: DataFrame, name: String = "signal", unit: String = "
   /** Reference-faithful mov_rms: window length in seconds, converted to
     * a sample count via the channel's inferred sample rate
     * (`extension.py:684`), result time axis shifted back by window/2
-    * (`extension.py:697`). Requires constant-rate channels.
+    * (`extension.py:697`). Requires constant-rate channels: a
+    * variable-rate channel fails.
+    *
+    * Two plans, chosen by `PerChannel.fitsOneTask`'s counted gate (one
+    * eager job): at or below [[graft.ops.PerChannel.GatherMaxSamples]]
+    * samples per channel, one channel gather and a sequential pass
+    * (`movRmsGathered`); above it, the windowed plan (`movRmsWindowed`),
+    * whose windows spill instead of holding a channel in arrays. Both
+    * quantize v² to the same grain and difference long prefix sums, so
+    * their rows are bit-identical.
     */
-  def movRms(window: Double): Signal = {
+  def movRms(window: Double): Signal = movRms(window, graft.ops.PerChannel.GatherMaxSamples)
+
+  private[graft] def movRms(window: Double, maxSamples: Long): Signal = {
+    val out =
+      if (graft.ops.PerChannel.fitsOneTask(df, maxSamples)) movRmsGathered(window)
+      else movRmsWindowed(window)
+    rebuild(out, s"mov_rms($name,$window)")
+  }
+
+  /** mov_rms on each channel's gathered arrays, replaying the windowed
+    * plan's arithmetic: `SigMath.samplerate` is `samplerate()`'s
+    * sequential mean interval, `n` and the quanta round as Spark's
+    * `round(x, 0)` does, and the grain is `Signal.grainOf`.
+    */
+  private def movRmsGathered(window: Double): DataFrame =
+    graft.ops.PerChannel.transformSamples(df) { (ch, ts, vs) =>
+      // one sample has no interval and so no sample rate: the windowed
+      // plan's inner join with the rates drops the channel
+      if (ts.length < 2) (Array.emptyDoubleArray, Array.emptyDoubleArray)
+      else {
+        val sr = graft.dsp.SigMath.samplerate(ts).getOrElse(throw new IllegalStateException(
+          s"channel '$ch' has a variable sample rate; resample() it before mov_rms"))
+        val n = Math.toIntExact(Signal.roundHalfUp(sr * window))
+        require(n >= 1, s"mov_rms window $window s is under half a sample at $sr Hz")
+        val cnt = vs.length
+        var mx = 0.0
+        var i = 0
+        while (i < cnt) { mx = math.max(mx, math.abs(vs(i))); i += 1 }
+        val grain = Signal.grainOf(mx * mx, cnt.toLong)
+        // cum(k) = quantized sum over rows 1..k (1-based)
+        val cum = new Array[Long](cnt + 1)
+        i = 0
+        while (i < cnt) { cum(i + 1) = cum(i) + Signal.roundHalfUp(vs(i) * vs(i) / grain); i += 1 }
+        // rows n <= rn < cnt: the warm-up and the final row are trimmed
+        val m = math.max(cnt - n, 0)
+        val tOut = new Array[Double](m)
+        val vOut = new Array[Double](m)
+        var k = 0
+        while (k < m) {
+          val rn = n + k
+          tOut(k) = ts(rn - 1) - window / 2
+          vOut(k) = math.sqrt((cum(rn) - cum(rn - n)).toDouble * grain / n)
+          k += 1
+        }
+        (tOut, vOut)
+      }
+    }
+
+  /** mov_rms as window functions over each channel. */
+  private def movRmsWindowed(window: Double): DataFrame = {
     val sr = samplerate().select(col("channel"), col("samplerate"))
     val joined = df.join(broadcast(sr), Seq("channel"))
     // n differs per channel, so the frame cannot be a plan constant;
@@ -174,13 +232,12 @@ final case class Signal(df: DataFrame, name: String = "signal", unit: String = "
       .withColumn("cum",
         sum(round(col("v") * col("v") / col("grain"), 0).cast("long")).over(run))
     val prev = cum.select(col("channel"), (col("rn") + col("n")).as("rn"), col("cum").as("cum_prev"))
-    val res = cum.join(prev, Seq("channel", "rn"), "left")
+    cum.join(prev, Seq("channel", "rn"), "left")
       .filter(col("rn") >= col("n") && col("rn") < col("cnt"))
       .select(col("channel"),
         (col("t") - lit(window / 2)).as("t"),
         sqrt((col("cum") - coalesce(col("cum_prev"), lit(0L))).cast("double")
           * col("grain") / col("n")).as("v"))
-    rebuild(res, s"mov_rms($name,$window)")
   }
 
   /** Cumulative trapezoidal integral with initial 0
@@ -415,6 +472,15 @@ object Signal {
           scale.cast("string"), lit(", cnt="), cnt.cast("string"), lit(")"))))
       .otherwise(g)
   }
+  /** Spark's `round(x, 0).cast("long")` on a double: HALF_UP on the
+    * shortest decimal of x (`BigDecimal.valueOf`), back to a double,
+    * then truncated — the double step matters above 1e16, where the
+    * shortest decimal is not the double's exact value.
+    */
+  private[graft] def roundHalfUp(x: Double): Long =
+    java.math.BigDecimal.valueOf(x).setScale(0, java.math.RoundingMode.HALF_UP)
+      .doubleValue().toLong
+
   def grainOf(scale: Double, cnt: Long): Double = {
     val g = scale * cnt / GrainDenom
     require(!g.isNaN && !g.isInfinite,

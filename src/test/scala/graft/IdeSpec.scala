@@ -3,6 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,6 +25,24 @@ class IdeSpec extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[File]
+
+  /** A temp directory that is deleted, with everything in it, when the
+    * current test ends (`deleteOnExit` never deletes a non-empty one).
+    */
+  private def tempDir(prefix: String): File = {
+    val d = Files.createTempDirectory(prefix).toFile
+    tempDirs.synchronized(tempDirs += d)
+    d
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally tempDirs.synchronized {
+      tempDirs.foreach(FileUtils.deleteQuietly)
+      tempDirs.clear()
+    }
 
   private def tmpIde(prefix: String): String = {
     val f = File.createTempFile(s"graft_$prefix", ".ide")
@@ -127,8 +146,7 @@ class IdeSpec extends AnyFunSuite {
       (0 until 100).flatMap(i => (0 until 3).map(s =>
         (1, s, i / 500.0, math.cos(i * 0.2 + s))))
     val df = rows.toDF("ch", "sub", "t", "v").repartition(7)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ide_w").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_ide_w")
     graft.signal.Ide.write(df, dir.getAbsolutePath, timeBaseUs = 1700000000000000L)
     val parts = dir.listFiles().filter(_.getName.endsWith(".ide"))
     assert(parts.nonEmpty)
@@ -215,8 +233,7 @@ class IdeSpec extends AnyFunSuite {
   }
 
   test("a directory of rollover files reads as one continuous recording") {
-    val dir = Files.createTempDirectory("graft_ide_fleet").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_ide_fleet")
     // two files from the same device config; file 2's clock starts
     // 0.5 s after file 1's — t must be continuous on file 1's origin
     val mk = (vals: Array[Array[Double]]) =>
@@ -260,8 +277,7 @@ class IdeSpec extends AnyFunSuite {
   }
 
   test("streaming: new rollover files arrive as micro-batches on one clock") {
-    val dir = Files.createTempDirectory("graft_ide_stream").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_ide_stream")
     val mk = (vals: Array[Array[Double]]) =>
       IdeSink.Ch(0, "accel", 1000.0, MideSchema.FmtFloat64,
         Seq(IdeSink.Sub("ax", "g")), vals, blockFrames = 64)
@@ -293,8 +309,7 @@ class IdeSpec extends AnyFunSuite {
     val df = vals.zipWithIndex
       .map { case (v, i) => (5, 0, i / 1000.0, v) }.toSeq
       .toDF("ch", "sub", "t", "v")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ide_i16").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_ide_i16")
     df.write.format(graft.sources.IdeSource.NAME)
       .option("fmt", "int16").mode("append").save(dir.getAbsolutePath)
     val back = Ide.read(spark, dir.getAbsolutePath)
@@ -307,8 +322,7 @@ class IdeSpec extends AnyFunSuite {
     }
     // the payload really is 2 bytes/sample: the int16 file is ~4x
     // smaller than the float64 form of the same data
-    val f64 = java.nio.file.Files.createTempDirectory("graft_ide_f64").toFile
-    f64.deleteOnExit()
+    val f64 = tempDir("graft_ide_f64")
     df.write.format(graft.sources.IdeSource.NAME).mode("append").save(f64.getAbsolutePath)
     def bytes(d: java.io.File) = d.listFiles().filter(_.getName.endsWith(".ide")).map(_.length()).sum
     assert(bytes(dir) * 3 < bytes(f64),
@@ -316,9 +330,8 @@ class IdeSpec extends AnyFunSuite {
   }
 
   test("streaming: checkpoint restart resumes at the committed offset on one clock") {
-    val dir = Files.createTempDirectory("graft_ide_restart").toFile
-    val ckpt = Files.createTempDirectory("graft_ide_ckpt").toFile
-    dir.deleteOnExit(); ckpt.deleteOnExit()
+    val dir = tempDir("graft_ide_restart")
+    val ckpt = tempDir("graft_ide_ckpt")
     val mk = (base: Double, n: Int) =>
       IdeSink.Ch(0, "accel", 1000.0, MideSchema.FmtFloat64,
         Seq(IdeSink.Sub("ax", "g")),
@@ -327,8 +340,7 @@ class IdeSpec extends AnyFunSuite {
 
     // memory sinks cannot recover; a parquet sink + checkpoint is the
     // durable shape a real ingestion job runs
-    val out = Files.createTempDirectory("graft_ide_out").toFile
-    out.deleteOnExit()
+    val out = tempDir("graft_ide_out")
     def start() = Ide.readStream(spark, dir.getAbsolutePath)
       .writeStream.format("parquet")
       .option("path", out.getAbsolutePath)
@@ -356,17 +368,15 @@ class IdeSpec extends AnyFunSuite {
   }
 
   test("streaming: offset log entries stay constant-size as files accumulate") {
-    val dir = Files.createTempDirectory("graft_ide_compact").toFile
-    val ckpt = Files.createTempDirectory("graft_ide_compact_ckpt").toFile
-    dir.deleteOnExit(); ckpt.deleteOnExit()
+    val dir = tempDir("graft_ide_compact")
+    val ckpt = tempDir("graft_ide_compact_ckpt")
     val mk = (base: Double, n: Int) =>
       IdeSink.Ch(0, "accel", 1000.0, MideSchema.FmtFloat64,
         Seq(IdeSink.Sub("ax", "g")),
         Array.tabulate(n)(i => Array(base + i)), blockFrames = 64)
     for (i <- 1 to 6)
       IdeSink.write(f"$dir/c_$i%03d.ide", 1700000000000000L + i * 100000L, Seq(mk(i * 10.0, 20)))
-    val out = Files.createTempDirectory("graft_ide_compact_out").toFile
-    out.deleteOnExit()
+    val out = tempDir("graft_ide_compact_out")
     val q = Ide.readStream(spark, dir.getAbsolutePath)
       .writeStream.format("parquet")
       .option("path", out.getAbsolutePath)
@@ -390,10 +400,9 @@ class IdeSpec extends AnyFunSuite {
   }
 
   private def lateArrivalFixture(tag: String): (File, File, File, () => org.apache.spark.sql.streaming.StreamingQuery) = {
-    val dir = Files.createTempDirectory(s"graft_ide_$tag").toFile
-    val ckpt = Files.createTempDirectory(s"graft_ide_${tag}_ckpt").toFile
-    val out = Files.createTempDirectory(s"graft_ide_${tag}_out").toFile
-    dir.deleteOnExit(); ckpt.deleteOnExit(); out.deleteOnExit()
+    val dir = tempDir(s"graft_ide_$tag")
+    val ckpt = tempDir(s"graft_ide_${tag}_ckpt")
+    val out = tempDir(s"graft_ide_${tag}_out")
     val mk = (base: Double, n: Int) =>
       IdeSink.Ch(0, "accel", 1000.0, MideSchema.FmtFloat64,
         Seq(IdeSink.Sub("ax", "g")),

@@ -55,8 +55,6 @@ class Round16Spec extends AnyFunSuite {
   test("movRms bit-matches an in-JVM sequential replay of the count-folded grain") {
     val rows = channel(501, 2.75e3)
     val window = 4.0 // at sr = 2 Hz -> n = 8 samples
-    val got = Signal(rows.toDF("channel", "t", "v")).movRms(window).df
-      .orderBy("t").select("t", "v").as[(Double, Double)].collect()
 
     // sequential replay: identical grain derivation + quantized cumsum
     val vs = rows.map(_._3).toArray
@@ -69,11 +67,17 @@ class Round16Spec extends AnyFunSuite {
       val diff = cum(rn - 1) - (if (rn - nWin >= 1) cum(rn - nWin - 1) else 0L)
       (rows(rn - 1)._2 - window / 2, math.sqrt(diff.toDouble * grain / nWin))
     }
-    assert(got.length == expect.length)
-    got.zip(expect).foreach { case ((tg, vg), (te, ve)) =>
-      assert(tg == te && java.lang.Double.doubleToLongBits(vg) ==
-        java.lang.Double.doubleToLongBits(ve),
-        s"movRms bit-divergence at t=$tg: plan=$vg replay=$ve")
+    // both sides of the channel-size gate: the gathered pass (default
+    // threshold) and the windowed plan (threshold 1)
+    for (max <- Seq(graft.ops.PerChannel.GatherMaxSamples, 1L)) {
+      val got = Signal(rows.toDF("channel", "t", "v")).movRms(window, max).df
+        .orderBy("t").select("t", "v").as[(Double, Double)].collect()
+      assert(got.length == expect.length)
+      got.zip(expect).foreach { case ((tg, vg), (te, ve)) =>
+        assert(tg == te && java.lang.Double.doubleToLongBits(vg) ==
+          java.lang.Double.doubleToLongBits(ve),
+          s"movRms bit-divergence at t=$tg (threshold $max): plan=$vg replay=$ve")
+      }
     }
   }
 
@@ -314,7 +318,8 @@ class Round16Spec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcastWas)
       val ch = (0 until 3).flatMap(c => (0 until 2000).map(k =>
         (s"c$c", k * 0.5, math.sin(k / 7.0 + c)))).toDF("channel", "t", "v")
-      val mr = Signal(ch).movRms(4.0).df
+      // threshold 1: the windowed plan, the one with the join
+      val mr = Signal(ch).movRms(4.0, 1L).df
       mr.count()
       val bhj = finalPlan(mr).collect { case b: BroadcastHashJoinExec => b }
       assert(bhj.nonEmpty, "movRms samplerate join lost its broadcast at 200 partitions")

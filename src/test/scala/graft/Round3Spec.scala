@@ -143,6 +143,22 @@ class Round3Spec extends AnyFunSuite {
     intercept[Exception] {
       graft.ops.Interp.interp1dSpline(src, oor, "cubic", boundsError = true).collect()
     }
+    // a channel longer than chunkKnots (8192): the gathered resample
+    // solves it whole, the chunked plan (gate threshold 1) in chunks
+    // with 128-knot margins; they agree within the margin bound
+    val longN = 9000
+    val longSrc = (0 until longN).map(k => ("long", k * 0.25,
+      math.sin(k * 0.01) + 0.2 * rng.nextDouble())).toDF("channel", "t", "v")
+    def resampled(max: Long) = graft.ops.Interp.resample(longSrc, 3.0, "cubic", max)
+      .collect().map(r => r.getDouble(1) -> r.getDouble(2)).toMap
+    val wholeLong = resampled(graft.ops.PerChannel.GatherMaxSamples)
+    val chunkedLong = resampled(1L)
+    assert(wholeLong.size == math.ceil((longN - 1) * 0.25 * 3.0).toInt)
+    assert(chunkedLong.keySet == wholeLong.keySet)
+    chunkedLong.foreach { case (t, v) =>
+      assert(math.abs(v - wholeLong(t)) <= 1e-12 * math.max(1.0, math.abs(wholeLong(t))),
+        s"resample diverges at t=$t: $v vs ${wholeLong(t)}")
+    }
   }
 
   test("srsParallel struct keys: channel names with spaces and chunked grid match srs") {

@@ -179,13 +179,15 @@ class Round6Spec extends AnyFunSuite {
 
   test("connectedComponents: reliable checkpoint mode converges identically") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    val pairs = (0L until 20L).map(i => (i, i + 1)).toDF("a", "b")
-    val local = Dedup.connectedComponents(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val reliable = Dedup.connectedComponents(pairs, checkpointDir = Some(tmp))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(local == reliable)
-    assert(local.values.forall(_ == 0L))
+    val tmp = java.nio.file.Files.createTempDirectory("graft_ckpt").toFile
+    try {
+      val pairs = (0L until 20L).map(i => (i, i + 1)).toDF("a", "b")
+      val local = Dedup.connectedComponents(pairs)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val reliable = Dedup.connectedComponents(pairs, checkpointDir = Some(tmp.toString))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(local == reliable)
+      assert(local.values.forall(_ == 0L))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp)
   }
 }
