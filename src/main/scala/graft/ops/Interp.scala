@@ -287,33 +287,24 @@ object Interp {
     * construction, matching the reference's bounds_error-free path;
     * a grid point that rounds past the last sample reads NULL.
     *
-    * The cubic kind runs `PerChannel.fitsOneTask`'s counted gate (one
-    * eager job). At or below [[PerChannel.GatherMaxSamples]] samples
-    * per channel it gathers each channel and solves one whole-channel
-    * spline, streaming the grid (`resampleCubicGathered`); above it the
-    * grid is generated distributively with sequence+explode and fed to
-    * the chunk-parallel `interp1dSpline`. The two agree bit for bit on
-    * channels of at most its `chunkKnots` samples, and within its
-    * chunk-margin bound beyond. The other kinds always take the grid
-    * plan.
+    * The cubic kind gathers each channel once and solves one
+    * whole-channel spline, streaming the grid (`resampleCubic`); the
+    * other kinds interpolate at the distributed `resampleGrid`.
     */
-  def resample(src: DataFrame, sampleRate: Double, kind: String = "linear"): DataFrame =
-    resample(src, sampleRate, kind, PerChannel.GatherMaxSamples)
-
-  private[graft] def resample(src: DataFrame, sampleRate: Double, kind: String,
-                              maxSamples: Long): DataFrame = {
+  def resample(src: DataFrame, sampleRate: Double, kind: String = "linear"): DataFrame = {
     val step = 1.0 / sampleRate
-    if (kind == "cubic" && PerChannel.fitsOneTask(src, maxSamples))
-      resampleCubicGathered(src, step)
+    if (kind == "cubic") resampleCubic(src, step)
     else interp1d(src, resampleGrid(src, step), kind)
   }
 
   /** The cubic resample on each channel's gathered arrays: the grid is
     * `resampleGrid`'s (t0 + k*step for k < ceil((t1 - t0)/step)), and
     * every grid point outside [t0, t1] reads NULL, as in
-    * `interp1dSpline`.
+    * `interp1dSpline`. Same values as `interp1dSpline` on that grid,
+    * bit for bit on channels of at most its `chunkKnots` samples and
+    * within its chunk-margin bound beyond.
     */
-  private def resampleCubicGathered(src: DataFrame, step: Double): DataFrame = {
+  private def resampleCubic(src: DataFrame, step: Double): DataFrame = {
     val spark = src.sparkSession
     import spark.implicits._
     PerChannel.transform[(String, Double, Option[Double])](src) { (ch, ts, vs) =>

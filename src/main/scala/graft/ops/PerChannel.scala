@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import scala.collection.mutable.ArrayBuilder
 
 /** Harness for the operators whose semantics are inherently sequential
@@ -11,74 +11,73 @@ import scala.collection.mutable.ArrayBuilder
   * spill-friendly secondary-sort idiom: Spark's external sorter does
   * the ordering (can spill to disk), and `mapPartitions` then streams
   * the rows, slicing consecutive same-channel runs into arrays. One
-  * task processes many channels; one channel must fit in task memory.
-  *
-  * Operators that also have a plan for channels too large for one
-  * task (Welch's per-segment FFTs, the time-window mov_rms, the
-  * chunked cubic resample) choose between the two with the counted
-  * gate `fitsOneTask`: one `groupBy(channel).count()` aggregate,
-  * checked against [[GatherMaxSamples]]. At or below it the channel is
-  * gathered here and the single-threaded `graft.dsp` kernel runs on
-  * its arrays; above it the operator keeps its multi-stage plan.
+  * task processes many channels; one channel must fit in task memory
+  * (v1 contract; the parallel linear-recurrence scan over chunks is
+  * the documented v2 path for single giant channels). Every
+  * whole-channel analysis gathers here: the IIR filters, SRS,
+  * rainflow, the periodogram, Welch (all segments of a channel in its
+  * task), the time-window mov_rms and the cubic resample.
   */
 object PerChannel {
 
-  /** The most samples a channel may have and still be gathered into
-    * one task by the gated operators (`Psd.welchAllWithSegRms`,
-    * `Signal.movRms`, `Interp.resample(..., "cubic")`). Sized from the
-    * gathered arrays' memory: `transform` holds t and v as doubles
-    * (16 B/sample, up to 48 B while the array builders double and
-    * copy), and the largest kernel scratch is the cubic spline's
-    * tridiagonal solve, nine doubles per knot (72 B). About 120 B per
-    * sample is 120 MiB per task at 2^20 samples, so four concurrent
-    * tasks stay within a 2 GiB heap. Longer channels take the
-    * operators' spill-capable window plans.
-    */
-  val GatherMaxSamples: Long = 1L << 20
-
-  /** The counted gate: true when no channel of `df` has more than
-    * `maxSamples` rows. Runs eagerly, when the operator is built — one
-    * group-by-channel count, as an RDD `reduceByKey` so it is a single
-    * job of two stages (the DataFrame form runs as two jobs under
-    * adaptive execution, its map stage and its result stage).
-    */
-  private[graft] def fitsOneTask(df: DataFrame, maxSamples: Long): Boolean =
-    df.select(org.apache.spark.sql.functions.col("channel").cast("string")).rdd
-      .map(r => (r.getString(0), 1L))
-      .reduceByKey(_ + _)
-      .filter(_._2 > maxSamples)
-      .count() == 0
-
   case class Sample(channel: String, t: Double, v: Double)
+  case class NullableSample(channel: String, t: Double, v: Option[Double])
 
   /** Stream each channel's time-sorted (t[], v[]) arrays through `f`,
-    * collecting rows of type T.
+    * collecting rows of type T. A NULL t or v fails the task.
     */
   def transform[T: Encoder](df: DataFrame)(
       f: (String, Array[Double], Array[Double]) => Iterator[T]): Dataset[T] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.selectExpr("channel", "cast(t as double) t", "cast(v as double) v").as[Sample]
-      .repartition(org.apache.spark.sql.functions.col("channel"))
+    byChannel(df.selectExpr("channel", "cast(t as double) t", "cast(v as double) v")
+        .as[Sample])(_.channel) { (ch, run) =>
+      val tb = new ArrayBuilder.ofDouble
+      val vb = new ArrayBuilder.ofDouble
+      run.foreach { s => tb += s.t; vb += s.v }
+      f(ch, tb.result(), vb.result())
+    }
+  }
+
+  /** Like `transform`, for kernels that give a NULL v a meaning: the
+    * third array is true where v is NULL, and v reads 0.0 there.
+    */
+  private[graft] def transformNullable[T: Encoder](df: DataFrame)(
+      f: (String, Array[Double], Array[Double], Array[Boolean]) => Iterator[T]): Dataset[T] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    byChannel(df.selectExpr("channel", "cast(t as double) t", "cast(v as double) v")
+        .as[NullableSample])(_.channel) { (ch, run) =>
+      val tb = new ArrayBuilder.ofDouble
+      val vb = new ArrayBuilder.ofDouble
+      val nb = new ArrayBuilder.ofBoolean
+      run.foreach { s => tb += s.t; vb += s.v.getOrElse(0.0); nb += s.v.isEmpty }
+      f(ch, tb.result(), vb.result(), nb.result())
+    }
+  }
+
+  /** The secondary sort: hands `f` each channel's consecutive run of
+    * rows in t order. `f` must read its run to the end before it
+    * returns (the run and the next channel share one partition
+    * iterator).
+    */
+  private def byChannel[S, T: Encoder](ds: Dataset[S])(channelOf: S => String)(
+      f: (String, Iterator[S]) => Iterator[T]): Dataset[T] =
+    ds.repartition(org.apache.spark.sql.functions.col("channel"))
       .sortWithinPartitions("channel", "t")
       .mapPartitions { rows =>
         val it = rows.buffered
         new Iterator[Iterator[T]] {
           def hasNext: Boolean = it.hasNext
           def next(): Iterator[T] = {
-            val ch = it.head.channel
-            val tb = new ArrayBuilder.ofDouble
-            val vb = new ArrayBuilder.ofDouble
-            while (it.hasNext && it.head.channel == ch) {
-              val s = it.next()
-              tb += s.t
-              vb += s.v
-            }
-            f(ch, tb.result(), vb.result())
+            val ch = channelOf(it.head)
+            f(ch, new Iterator[S] {
+              def hasNext: Boolean = it.hasNext && channelOf(it.head) == ch
+              def next(): S = it.next()
+            })
           }
         }.flatten
       }
-  }
 
   case class ChunkedSample(channel: String, chunk: Int, t: Double, v: Double)
 

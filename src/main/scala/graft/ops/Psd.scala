@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.dsp.{SigMath, Spectral}
@@ -10,78 +10,18 @@ import graft.dsp.{SigMath, Spectral}
   *
   * Welch's method is "mean of modified periodograms" — a partial/final
   * aggregation. Every Welch entry point (`welchAll`, `welch`, `getPsd`
-  * with a window) builds its sub-PSD table in `welchAllWithSegRms`,
-  * which picks one of two plans with `PerChannel.fitsOneTask`, a
-  * counted gate on the largest channel:
-  *
-  *  - at or below [[PerChannel.GatherMaxSamples]] samples per channel,
-  *    one channel gather: each channel's arrays are sliced with
-  *    `Spectral.welchStarts` and every segment runs
-  *    `Spectral.periodogram` in the same task;
-  *  - above it, the segmented plan, whose parallelism scales with
-  *    segments, not channels: per-channel params (sample rate,
-  *    window/overlap sizes) from one small aggregate broadcast back,
-  *    each sample assigned to its overlapping segment ids with
-  *    explode(sequence(...)) (duplicating data only by the overlap
-  *    factor), and one FFT task per (channel, segment).
-  *
-  * Both emit the same (channel, w, freq, p, seg_rms) rows bit for bit.
-  * The summarize stage is groupBy(channel, freq) aggregates
-  * (mean/median/max/min) or a two-level aggregate for the
-  * 'max rms'/'damage' rescale modes, on either plan.
+  * with a window) builds its sub-PSD table in `welchAllWithSegRms`:
+  * one `PerChannel` gather per channel, whose task slices the
+  * channel's arrays with `Spectral.welchStarts` and runs
+  * `Spectral.periodogram` on every segment. The summarize stage is
+  * groupBy(channel, freq) aggregates (mean/median/max/min) or a
+  * two-level aggregate for the 'max rms'/'damage' rescale modes.
   */
 object Psd {
 
   // NOT private: Catalyst's generated encoder projections need public
-  // access to these row classes
-  case class SegRow(channel: String, w: Long, idx: Long, v: Double,
-                    sr: Double, nWindow: Int)
+  // access to this row class
   case class PsdRmsRow(channel: String, w: Long, freq: Double, p: Double, segRms: Double)
-
-  private def chw = Window.partitionBy("channel").orderBy("t")
-
-  /** Per-channel constant-rate params; throws if any channel is
-    * variable-rate (mirrors the reference, whose samplerate-dependent
-    * ops cannot run there either).
-    */
-  private def withParams(df: DataFrame, windowLength: Double, overlap: Double): DataFrame = {
-    val sig = graft.signal.Signal(df)
-    val params = sig.samplerate()
-      .select(col("channel"), col("samplerate"))
-      // NULL samplerate (variable-rate channel) must FAIL here, not
-      // null-propagate into the segment filter and silently drop the
-      // channel from the PSD
-      .withColumn("nWindow", when(col("samplerate").isNull,
-          raise_error(concat(lit("channel '"), col("channel"),
-            lit("' has a variable sample rate; resample() it before PSD"))).cast("int"))
-        .otherwise((col("samplerate") * lit(windowLength)).cast("int")))
-      .withColumn("nOverlap", bround(col("nWindow") * lit(overlap)).cast("int"))
-      .withColumn("step", col("nWindow") - col("nOverlap"))
-    df.join(broadcast(params), Seq("channel"))
-  }
-
-  /** Overlapping-segment assignment (the batch analog of sliding
-    * windows): each sample lands in segments wLo..wHi via
-    * explode(sequence), duplicating data only by the overlap factor.
-    */
-  private def segmented(df: DataFrame, windowLength: Double,
-                        overlap: Double): Dataset[SegRow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    withParams(df, windowLength, overlap)
-      .withColumn("rn", row_number().over(chw).cast("long") - 1)
-      .withColumn("cnt", count(lit(1)).over(Window.partitionBy("channel")))
-      .withColumn("nSegs", floor((col("cnt") - col("nOverlap")) / col("step")))
-      .withColumn("wLo", greatest(lit(0L),
-        ceil((col("rn") - col("nWindow") + 1) / col("step")).cast("long")))
-      .withColumn("wHi", least(col("nSegs") - 1, floor(col("rn") / col("step")).cast("long")))
-      .filter(col("wLo") <= col("wHi"))
-      .select(col("channel"), explode(sequence(col("wLo"), col("wHi"))).as("w"),
-        col("rn"), col("v"), col("samplerate").as("sr"), col("nWindow"), col("step"))
-      .select(col("channel"), col("w"), (col("rn") - col("w") * col("step")).as("idx"),
-        col("v"), col("sr"), col("nWindow"))
-      .as[SegRow]
-  }
 
   /** Whole-series periodogram per channel — the window_length=None path
     * of `get_psd` (`extension.py:610-611`): one FFT task per channel.
@@ -112,41 +52,18 @@ object Psd {
     * trapezoid RMS (`tools.py:85-90`'s per-window rms list), computed
     * inside the FFT task — so the rescale summarize modes need ONE
     * pass over the data instead of re-running the segment pipeline
-    * for the sub-RMS branch. Runs the counted channel-size gate (one
-    * eager job) to choose the gathered or the segmented plan.
+    * for the sub-RMS branch.
+    *
+    * The parameters are the reference's: the sample rate is
+    * `SigMath.samplerate` (a variable-rate channel fails), nWindow
+    * truncates sr * windowLength, and nOverlap rounds half to even.
+    * A one-sample channel has no sample rate and yields no rows.
     */
   def welchAllWithSegRms(df: DataFrame, windowLength: Double, overlap: Double = 0.5,
-                         windowType: String = "hann", detrend: String = "constant"): DataFrame =
-    welchAllWithSegRms(df, windowLength, overlap, windowType, detrend,
-      PerChannel.GatherMaxSamples)
-
-  private[graft] def welchAllWithSegRms(df: DataFrame, windowLength: Double, overlap: Double,
-                                        windowType: String, detrend: String,
-                                        maxSamples: Long): DataFrame =
-    if (PerChannel.fitsOneTask(df, maxSamples))
-      welchGathered(df, windowLength, overlap, windowType, detrend)
-    else welchSegmented(df, windowLength, overlap, windowType, detrend)
-
-  /** sqrt of the segment PSD's trapezoid integral, the seg_rms column. */
-  private def segRmsOf(f: Array[Double], p: Array[Double]): Double = {
-    var trapz = 0.0
-    var j = 1
-    while (j < f.length) { trapz += (p(j) + p(j - 1)) / 2.0 * (f(j) - f(j - 1)); j += 1 }
-    math.sqrt(trapz)
-  }
-
-  /** The sub-PSD table from one gather per channel. The parameters
-    * repeat `withParams`'s arithmetic: `SigMath.samplerate` is
-    * `Signal.samplerate`'s sequential mean interval, the int cast
-    * truncates, and `math.rint` is `bround`'s half-even rounding.
-    */
-  private def welchGathered(df: DataFrame, windowLength: Double, overlap: Double,
-                            windowType: String, detrend: String): DataFrame = {
+                         windowType: String = "hann", detrend: String = "constant"): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     PerChannel.transform[PsdRmsRow](df) { (ch, ts, vs) =>
-      // one sample has no interval and so no sample rate: the
-      // segmented plan's inner join with the params drops the channel
       if (ts.length < 2) Iterator.empty
       else {
         val sr = SigMath.samplerate(ts).getOrElse(throw new IllegalStateException(
@@ -164,24 +81,12 @@ object Psd {
     }.toDF("channel", "w", "freq", "p", "seg_rms")
   }
 
-  /** The sub-PSD table distributed over (channel, segment). */
-  private def welchSegmented(df: DataFrame, windowLength: Double, overlap: Double,
-                             windowType: String, detrend: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val prepared = segmented(df, windowLength, overlap)
-    prepared.groupByKey(r => (r.channel, r.w)).flatMapGroups { (key: (String, Long), rows: Iterator[SegRow]) =>
-      val (ch, w) = key
-      val buf = rows.toArray.sortBy(_.idx)
-      val sr = buf(0).sr
-      val n = buf(0).nWindow
-      val vs = new Array[Double](n)
-      var i = 0
-      while (i < buf.length) { vs(buf(i).idx.toInt) = buf(i).v; i += 1 }
-      val (f, p) = Spectral.periodogram(vs, sr, windowType, detrend)
-      val segRms = segRmsOf(f, p)
-      Iterator.tabulate(f.length)(i => PsdRmsRow(ch, w, f(i), p(i), segRms))
-    }.toDF("channel", "w", "freq", "p", "seg_rms")
+  /** sqrt of the segment PSD's trapezoid integral, the seg_rms column. */
+  private def segRmsOf(f: Array[Double], p: Array[Double]): Double = {
+    var trapz = 0.0
+    var j = 1
+    while (j < f.length) { trapz += (p(j) + p(j - 1)) / 2.0 * (f(j) - f(j - 1)); j += 1 }
+    math.sqrt(trapz)
   }
 
   /** Full Welch estimate with all seven summarize modes

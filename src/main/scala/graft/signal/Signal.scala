@@ -130,114 +130,61 @@ final case class Signal(df: DataFrame, name: String = "signal", unit: String = "
     * (`extension.py:697`). Requires constant-rate channels: a
     * variable-rate channel fails.
     *
-    * Two plans, chosen by `PerChannel.fitsOneTask`'s counted gate (one
-    * eager job): at or below [[graft.ops.PerChannel.GatherMaxSamples]]
-    * samples per channel, one channel gather and a sequential pass
-    * (`movRmsGathered`); above it, the windowed plan (`movRmsWindowed`),
-    * whose windows spill instead of holding a channel in arrays. Both
-    * quantize v² to the same grain and difference long prefix sums, so
-    * their rows are bit-identical.
+    * One `PerChannel` gather per channel and a sequential pass. The
+    * window sum is a difference of running sums of v², with the
+    * squares quantized to a per-channel grain and accumulated as
+    * LONGs: differencing two ~1e9-magnitude float cumsums is
+    * catastrophic cancellation, and the running sum's addition-order
+    * drift (segment tree vs sequential) survives in the small
+    * difference and flips round-6 ties at scale (r14 sf1 campaign:
+    * 1/36k rows vs the oracle's direct 2-row frame). Integer
+    * accumulation is associative, so the prefix difference equals the
+    * direct window sum EXACTLY in every engine. The grain is
+    * [[Signal.grainOf]]`(max(|v|)², cnt)`: relative to the channel's
+    * amplitude AND row count, so the long prefix sum stays below 2^63
+    * for any channel length (see [[Signal.GrainBits]]). n and the
+    * quanta round as SQL `round(x, 0)` does ([[Signal.roundHalfUp]]),
+    * so a SQL replay of the same arithmetic matches bit for bit.
+    *
+    * A NULL v counts as a row (in n's warm-up trim and in cnt), adds
+    * a zero quantum and is left out of the max; an output row whose
+    * prefix holds no value at all reads NULL.
     */
-  def movRms(window: Double): Signal = movRms(window, graft.ops.PerChannel.GatherMaxSamples)
-
-  private[graft] def movRms(window: Double, maxSamples: Long): Signal = {
-    val out =
-      if (graft.ops.PerChannel.fitsOneTask(df, maxSamples)) movRmsGathered(window)
-      else movRmsWindowed(window)
-    rebuild(out, s"mov_rms($name,$window)")
-  }
-
-  /** mov_rms on each channel's gathered arrays, replaying the windowed
-    * plan's arithmetic: `SigMath.samplerate` is `samplerate()`'s
-    * sequential mean interval, `n` and the quanta round as Spark's
-    * `round(x, 0)` does, and the grain is `Signal.grainOf`.
-    */
-  private def movRmsGathered(window: Double): DataFrame =
-    graft.ops.PerChannel.transformSamples(df) { (ch, ts, vs) =>
-      // one sample has no interval and so no sample rate: the windowed
-      // plan's inner join with the rates drops the channel
-      if (ts.length < 2) (Array.emptyDoubleArray, Array.emptyDoubleArray)
-      else {
-        val sr = graft.dsp.SigMath.samplerate(ts).getOrElse(throw new IllegalStateException(
-          s"channel '$ch' has a variable sample rate; resample() it before mov_rms"))
-        val n = Math.toIntExact(Signal.roundHalfUp(sr * window))
-        require(n >= 1, s"mov_rms window $window s is under half a sample at $sr Hz")
-        val cnt = vs.length
-        var mx = 0.0
-        var i = 0
-        while (i < cnt) { mx = math.max(mx, math.abs(vs(i))); i += 1 }
-        val grain = Signal.grainOf(mx * mx, cnt.toLong)
-        // cum(k) = quantized sum over rows 1..k (1-based)
-        val cum = new Array[Long](cnt + 1)
-        i = 0
-        while (i < cnt) { cum(i + 1) = cum(i) + Signal.roundHalfUp(vs(i) * vs(i) / grain); i += 1 }
-        // rows n <= rn < cnt: the warm-up and the final row are trimmed
-        val m = math.max(cnt - n, 0)
-        val tOut = new Array[Double](m)
-        val vOut = new Array[Double](m)
-        var k = 0
-        while (k < m) {
-          val rn = n + k
-          tOut(k) = ts(rn - 1) - window / 2
-          vOut(k) = math.sqrt((cum(rn) - cum(rn - n)).toDouble * grain / n)
-          k += 1
+  def movRms(window: Double): Signal = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val out = graft.ops.PerChannel.transformNullable[(String, Double, Option[Double])](df) {
+      (ch, ts, vs, isNull) =>
+        // one sample has no interval and so no sample rate
+        if (ts.length < 2) Iterator.empty
+        else {
+          val sr = graft.dsp.SigMath.samplerate(ts).getOrElse(throw new IllegalStateException(
+            s"channel '$ch' has a variable sample rate; resample() it before mov_rms"))
+          val n = Math.toIntExact(Signal.roundHalfUp(sr * window))
+          require(n >= 1, s"mov_rms window $window s is under half a sample at $sr Hz")
+          val cnt = vs.length
+          // 0-based index of the first non-NULL v (cnt when there is none)
+          val first = isNull.indexOf(false) match { case -1 => cnt; case i => i }
+          var mx = 0.0
+          var i = first
+          while (i < cnt) { if (!isNull(i)) mx = math.max(mx, math.abs(vs(i))); i += 1 }
+          val grain = if (first < cnt) Signal.grainOf(mx * mx, cnt.toLong) else Double.NaN
+          // cum(k) = quantized sum over rows 1..k (1-based)
+          val cum = new Array[Long](cnt + 1)
+          i = 0
+          while (i < cnt) {
+            cum(i + 1) = cum(i) + (if (isNull(i)) 0L else Signal.roundHalfUp(vs(i) * vs(i) / grain))
+            i += 1
+          }
+          // rows n <= rn < cnt: the warm-up and the final row are trimmed
+          Iterator.range(n, cnt).map { rn =>
+            (ch, ts(rn - 1) - window / 2,
+              if (rn <= first) None
+              else Some(math.sqrt((cum(rn) - cum(rn - n)).toDouble * grain / n)))
+          }
         }
-        (tOut, vOut)
-      }
-    }
-
-  /** mov_rms as window functions over each channel. */
-  private def movRmsWindowed(window: Double): DataFrame = {
-    val sr = samplerate().select(col("channel"), col("samplerate"))
-    val joined = df.join(broadcast(sr), Seq("channel"))
-    // n differs per channel, so the frame cannot be a plan constant;
-    // equivalent running formulation: sum(v^2) over an unbounded frame
-    // minus the same running sum n rows earlier (equi-join on
-    // (channel, rn - n) stands in for the variable-length lag).
-    // The squares are quantized to a per-channel grain and
-    // accumulated as LONGs: differencing two ~1e9-magnitude float
-    // cumsums is catastrophic cancellation — the running sum's
-    // addition-order drift (segment tree vs sequential) survives in
-    // the small difference and flips round-6 ties at scale (r14 sf1
-    // campaign: 1/36k rows vs the oracle's direct 2-row frame).
-    // Integer accumulation is associative, so cum-difference ≡ direct
-    // window sum EXACTLY in every engine. The grain is RELATIVE to
-    // channel amplitude AND row count, max(|v|)²·cnt/2^62 (r15
-    // verdict: the count-free max²/2^34 grain had a DOCUMENTED but
-    // UNGUARDED int64 envelope — a max-amplitude channel past 2^28
-    // rows silently overflowed the long cumsum; folding cnt into the
-    // grain makes per-term quanta ≤ 2^62/cnt, so the prefix sum is
-    // bounded by 2^62 + cnt/2 < 2^63 for ANY channel length up to
-    // 2^53 rows, where cnt itself stops being double-exact — see the
-    // enforced-bound note at [[Signal.GrainBits]]). Every operation
-    // in the derivation — max, count, two multiplies, divide by a
-    // power of two — is IEEE-exact-or-deterministically-rounded and
-    // order-free, so Spark and a SQL oracle compute the identical
-    // grain; the quantization walk is ≤ max(v²)·cnt·2^-63·√n — at or
-    // below the old 2^-34 relative grain for any cnt ≤ 2^28, and
-    // gracefully coarsening (instead of overflowing) beyond.
-    val run = w.rowsBetween(Window.unboundedPreceding, 0)
-    val mx = max(abs(col("v"))).over(wAll)
-    val cntAll = count(lit(1)).over(wAll)
-    val cum = joined
-      .withColumn("grain", Signal.grain(mx * mx, cntAll))
-      // NULL samplerate (variable-rate channel) must FAIL, not make
-      // the rn >= n filter silently drop every row of the channel
-      .withColumn("n", when(col("samplerate").isNull,
-          raise_error(concat(lit("channel '"), col("channel"),
-            lit("' has a variable sample rate; resample() it before mov_rms"))).cast("int"))
-        .otherwise(round(col("samplerate") * lit(window)).cast("int")))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("cnt", count(lit(1)).over(wAll))
-      .withColumn("cum",
-        sum(round(col("v") * col("v") / col("grain"), 0).cast("long")).over(run))
-    val prev = cum.select(col("channel"), (col("rn") + col("n")).as("rn"), col("cum").as("cum_prev"))
-    cum.join(prev, Seq("channel", "rn"), "left")
-      .filter(col("rn") >= col("n") && col("rn") < col("cnt"))
-      .select(col("channel"),
-        (col("t") - lit(window / 2)).as("t"),
-        sqrt((col("cum") - coalesce(col("cum_prev"), lit(0L))).cast("double")
-          * col("grain") / col("n")).as("v"))
+    }.toDF("channel", "t", "v")
+    rebuild(out, s"mov_rms($name,$window)")
   }
 
   /** Cumulative trapezoidal integral with initial 0

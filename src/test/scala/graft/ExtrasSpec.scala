@@ -86,45 +86,32 @@ class ExtrasSpec extends AnyFunSuite {
       ("ns", i / fs, amp * math.sin(2 * math.Pi * 16 * i / fs))
     }
     val df = rows.toDF("channel", "t", "v")
-    // both sides of the channel-size gate: the gathered sub-PSDs
-    // (default threshold) and the segmented ones (threshold 1) are
-    // bit-identical, and each passes every check below
-    def subPsd(max: Long) = graft.ops.Psd.welchAllWithSegRms(df, 1.0, 0.5, "hann", "constant", max)
-    def sortedRows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toSeq
-    assert(sortedRows(subPsd(graft.ops.PerChannel.GatherMaxSamples)) == sortedRows(subPsd(1L)))
-    def welchAt(max: Long, summarize: String) =
-      if (max == graft.ops.PerChannel.GatherMaxSamples)
-        graft.ops.Psd.welch(df, windowLength = 1.0, overlap = 0.5, summarize = summarize)
-      else if (summarize == "all") graft.ops.Psd.summarizeAll(subPsd(max).drop("seg_rms"), "all")
-      else graft.ops.Psd.rescale(subPsd(max), summarize, 4.0)
-    for (max <- Seq(graft.ops.PerChannel.GatherMaxSamples, 1L)) {
-      val all = welchAt(max, "all")
-        .collect().map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3)))
-      val byW = all.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, rs) =>
-        val sorted = rs.sortBy(_._2)
-        (sorted.map(_._2), sorted.map(_._3))
-      }
-      val freqs = byW.head._1
-      val meanPsd = freqs.indices.map(i => byW.map(_._2(i)).sum / byW.length)
-      val meanRms = graft.dsp.Spectral.rmsPsdLinear(meanPsd.toArray, freqs.toArray)
-      val subRms = byW.map { case (f, p) =>
-        graft.dsp.Spectral.rmsPsdLinear(p.toArray, f.toArray)
-      }
-      // 'max rms' (tools.py:85-90)
-      val expectMaxRms = meanPsd.map(_ * math.pow(subRms.max / meanRms, 2))
-      val gotMaxRms = welchAt(max, "max rms")
-        .collect().map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1).map(_._2)
-      gotMaxRms.zip(expectMaxRms).foreach { case (g, e) =>
-        assert(math.abs(g - e) < 1e-9 * (1 + e), s"$g vs $e")
-      }
-      // 'damage' (tools.py:91-96), fatigue exponent 4
-      val accel = math.pow(subRms.map(r => math.pow(r / meanRms, 4.0)).sum / subRms.length, 0.25)
-      val expectDamage = meanPsd.map(_ * accel * accel)
-      val gotDamage = welchAt(max, "damage")
-        .collect().map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1).map(_._2)
-      gotDamage.zip(expectDamage).foreach { case (g, e) =>
-        assert(math.abs(g - e) < 1e-9 * (1 + e), s"$g vs $e")
-      }
+    val all = graft.ops.Psd.welch(df, windowLength = 1.0, overlap = 0.5, summarize = "all")
+      .collect().map(r => (r.getLong(1), r.getDouble(2), r.getDouble(3)))
+    val byW = all.groupBy(_._1).toSeq.sortBy(_._1).map { case (_, rs) =>
+      val sorted = rs.sortBy(_._2)
+      (sorted.map(_._2), sorted.map(_._3))
+    }
+    val freqs = byW.head._1
+    val meanPsd = freqs.indices.map(i => byW.map(_._2(i)).sum / byW.length)
+    val meanRms = graft.dsp.Spectral.rmsPsdLinear(meanPsd.toArray, freqs.toArray)
+    val subRms = byW.map { case (f, p) =>
+      graft.dsp.Spectral.rmsPsdLinear(p.toArray, f.toArray)
+    }
+    // 'max rms' (tools.py:85-90)
+    val expectMaxRms = meanPsd.map(_ * math.pow(subRms.max / meanRms, 2))
+    val gotMaxRms = graft.ops.Psd.welch(df, 1.0, summarize = "max rms")
+      .collect().map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1).map(_._2)
+    gotMaxRms.zip(expectMaxRms).foreach { case (g, e) =>
+      assert(math.abs(g - e) < 1e-9 * (1 + e), s"$g vs $e")
+    }
+    // 'damage' (tools.py:91-96), fatigue exponent 4
+    val accel = math.pow(subRms.map(r => math.pow(r / meanRms, 4.0)).sum / subRms.length, 0.25)
+    val expectDamage = meanPsd.map(_ * accel * accel)
+    val gotDamage = graft.ops.Psd.welch(df, 1.0, summarize = "damage")
+      .collect().map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1).map(_._2)
+    gotDamage.zip(expectDamage).foreach { case (g, e) =>
+      assert(math.abs(g - e) < 1e-9 * (1 + e), s"$g vs $e")
     }
   }
 

@@ -7,15 +7,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Interp, PerChannel, Psd}
+import graft.ops.{Interp, Psd}
 import graft.signal.Signal
 
-/** The counted channel-size gate of the gathered operators (Welch PSD,
-  * time-window mov_rms, cubic resample): how many Spark jobs each runs
-  * on either side of it, and that both sides fail a variable-rate
-  * channel the same way.
+/** The `PerChannel` gathered operators (Welch PSD, time-window mov_rms,
+  * cubic resample): how many Spark jobs each runs, and how they fail a
+  * variable-rate channel.
   */
-class PerChannelGateSpec extends AnyFunSuite {
+class PerChannelSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -40,12 +39,12 @@ class PerChannelGateSpec extends AnyFunSuite {
     }.toDF("channel", "t", "v")
   }
 
-  /** Jobs started by building `op` (the gate runs then) and collecting
-    * its result, counted by a listener on the job group.
+  /** Jobs started by building `op` and collecting its result, counted
+    * by a listener on the job group.
     */
   private def jobsOf(op: => DataFrame): Int = {
     val sc = spark.sparkContext
-    val group = s"gate-${System.nanoTime()}"
+    val group = s"jobs-${System.nanoTime()}"
     val n = new AtomicInteger()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -53,7 +52,7 @@ class PerChannelGateSpec extends AnyFunSuite {
           n.incrementAndGet()
     }
     sc.addSparkListener(l)
-    sc.setJobGroup(group, "gate job count")
+    sc.setJobGroup(group, "job count")
     try {
       op.collect()
       ListenerBusDrain(sc)
@@ -64,33 +63,20 @@ class PerChannelGateSpec extends AnyFunSuite {
     }
   }
 
-  test("gathered Welch, mov_rms and cubic resample run the gate plus one gather") {
+  test("Welch, mov_rms and cubic resample each run one channel gather") {
     val df = frame().cache()
     df.count()
     try {
-      // below the gate: the gate (1) + the gather shuffle (1) + the
-      // result (1); Welch's mean adds its (channel, freq) aggregate
-      assert(jobsOf(Psd.getPsd(df, windowLength = Some(1.0))) == 4)
-      assert(jobsOf(Signal(df).movRms(0.5).df) == 3)
-      assert(jobsOf(Interp.resample(df, 40.0, "cubic")) == 3)
-      // above it (every channel is longer than 100 samples): the gate
-      // plus the unchanged multi-stage plans
-      assert(jobsOf(Psd.summarizeAll(
-        Psd.welchAllWithSegRms(df, 1.0, 0.5, "hann", "constant", 100L).drop("seg_rms"),
-        "mean")) == 7)
-      assert(jobsOf(Signal(df).movRms(0.5, 100L).df) == 9)
-      assert(jobsOf(Interp.resample(df, 40.0, "cubic", 100L)) == 13)
+      // the gather shuffle (1) + the result (1); Welch's mean adds its
+      // (channel, freq) aggregate. The multi-stage plans these replace
+      // ran 6, 8 and 12 jobs on this frame.
+      assert(jobsOf(Psd.getPsd(df, windowLength = Some(1.0))) == 3)
+      assert(jobsOf(Signal(df).movRms(0.5).df) == 2)
+      assert(jobsOf(Interp.resample(df, 40.0, "cubic")) == 2)
     } finally df.unpersist()
   }
 
-  test("the gate compares the largest channel against the threshold") {
-    val df = frame()
-    assert(PerChannel.fitsOneTask(df, PerChannel.GatherMaxSamples))
-    assert(PerChannel.fitsOneTask(df, 810L))
-    assert(!PerChannel.fitsOneTask(df, 809L))
-  }
-
-  test("a variable-rate channel fails with the same message on both sides of the gate") {
+  test("a variable-rate channel fails Welch and mov_rms by name") {
     val s = spark
     import s.implicits._
     // a NaN timestamp makes the interval maximum NaN: no sample rate
@@ -102,11 +88,9 @@ class PerChannelGateSpec extends AnyFunSuite {
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .map(c => String.valueOf(c.getMessage)).mkString(" | ")
     }
-    for (max <- Seq(PerChannel.GatherMaxSamples, 1L)) {
-      assert(messageOf(Signal(bad).movRms(0.5, max).df)
-        .contains("channel 'nan' has a variable sample rate; resample() it before mov_rms"))
-      assert(messageOf(Psd.welchAllWithSegRms(bad, 1.0, 0.5, "hann", "constant", max))
-        .contains("channel 'nan' has a variable sample rate; resample() it before PSD"))
-    }
+    assert(messageOf(Signal(bad).movRms(0.5).df)
+      .contains("channel 'nan' has a variable sample rate; resample() it before mov_rms"))
+    assert(messageOf(Psd.welchAllWithSegRms(bad, 1.0))
+      .contains("channel 'nan' has a variable sample rate; resample() it before PSD"))
   }
 }

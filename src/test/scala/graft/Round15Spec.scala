@@ -49,13 +49,9 @@ class Round15Spec extends AnyFunSuite {
 
   test("mov_rms stays correct on a µ-amplitude channel (amplitude-relative grain)") {
     val window = 2.0 // 2 s at 2 Hz -> n = 4 samples
-    def rowsAt(max: Long) = Signal(microChannel()).movRms(window, max).df
+    val rows = Signal(microChannel()).movRms(window).df
       .orderBy("t").collect()
-    val rows = rowsAt(graft.ops.PerChannel.GatherMaxSamples)
     assert(rows.nonEmpty)
-    // the windowed plan (gate threshold 1) returns the gathered rows
-    // bit for bit, so every check below holds for both
-    assert(rowsAt(1L).map(_.toString).toSeq == rows.map(_.toString).toSeq)
     // independent float replay of the reference semantics: trailing
     // 4-sample RMS, first n-1 rows and the final row trimmed, t
     // shifted back by window/2
@@ -98,8 +94,7 @@ class Round15Spec extends AnyFunSuite {
   test("all-zero channel: relative grain degrades to 1.0, results are exact zeros") {
     val z = (0 until 50).map(k => ("zero", k * 0.5, 0.0)).toDF("channel", "t", "v")
     assert(Signal(z).integralExact().df.agg(sum(abs(col("v")))).collect()(0).getDouble(0) === 0.0)
-    for (max <- Seq(graft.ops.PerChannel.GatherMaxSamples, 1L))
-      assert(Signal(z).movRms(2.0, max).df.agg(sum(abs(col("v")))).collect()(0).getDouble(0) === 0.0)
+    assert(Signal(z).movRms(2.0).df.agg(sum(abs(col("v")))).collect()(0).getDouble(0) === 0.0)
   }
 
   test("order-sensitive operators are bit-identical under any shuffle partitioning") {

@@ -55,6 +55,8 @@ class Round16Spec extends AnyFunSuite {
   test("movRms bit-matches an in-JVM sequential replay of the count-folded grain") {
     val rows = channel(501, 2.75e3)
     val window = 4.0 // at sr = 2 Hz -> n = 8 samples
+    val got = Signal(rows.toDF("channel", "t", "v")).movRms(window).df
+      .orderBy("t").select("t", "v").as[(Double, Double)].collect()
 
     // sequential replay: identical grain derivation + quantized cumsum
     val vs = rows.map(_._3).toArray
@@ -67,17 +69,51 @@ class Round16Spec extends AnyFunSuite {
       val diff = cum(rn - 1) - (if (rn - nWin >= 1) cum(rn - nWin - 1) else 0L)
       (rows(rn - 1)._2 - window / 2, math.sqrt(diff.toDouble * grain / nWin))
     }
-    // both sides of the channel-size gate: the gathered pass (default
-    // threshold) and the windowed plan (threshold 1)
-    for (max <- Seq(graft.ops.PerChannel.GatherMaxSamples, 1L)) {
-      val got = Signal(rows.toDF("channel", "t", "v")).movRms(window, max).df
-        .orderBy("t").select("t", "v").as[(Double, Double)].collect()
-      assert(got.length == expect.length)
-      got.zip(expect).foreach { case ((tg, vg), (te, ve)) =>
-        assert(tg == te && java.lang.Double.doubleToLongBits(vg) ==
-          java.lang.Double.doubleToLongBits(ve),
-          s"movRms bit-divergence at t=$tg (threshold $max): plan=$vg replay=$ve")
+    assert(got.length == expect.length)
+    got.zip(expect).foreach { case ((tg, vg), (te, ve)) =>
+      assert(tg == te && java.lang.Double.doubleToLongBits(vg) ==
+        java.lang.Double.doubleToLongBits(ve),
+        s"movRms bit-divergence at t=$tg: plan=$vg replay=$ve")
+    }
+  }
+
+  test("movRms gives a NULL sample a zero quantum and a row, and reads NULL before any value") {
+    // NULL v is what resample() emits past a channel's last sample;
+    // "ch" opens with 10 NULLs and has two more inside, "none" is all
+    // NULL (no max, no grain)
+    val rows = channel(60, 3.5).zipWithIndex.map { case ((c, t, v), k) =>
+      (c, t, if (k < 10 || k == 25 || k == 40) None else Some(v))
+    } ++ (0 until 20).map(k => ("none", k * 0.5, Option.empty[Double]))
+    val window = 4.0 // at sr = 2 Hz -> n = 8 samples
+    val nWin = 8
+    val got = Signal(rows.toDF("channel", "t", "v")).movRms(window).df
+      .orderBy("channel", "t").select("channel", "t", "v").as[(String, Double, Option[Double])]
+      .collect()
+
+    // sequential replay: a NULL counts in rn and cnt, adds a zero
+    // quantum and is left out of the max; a row whose prefix holds no
+    // value reads NULL
+    val expect = rows.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (c, rs) =>
+      val vs = rs.map(_._3).toArray
+      val cnt = vs.length
+      val present = vs.flatten
+      val grain =
+        if (present.isEmpty) Double.NaN
+        else { val m = present.map(math.abs).max; Signal.grainOf(m * m, cnt.toLong) }
+      val cum = vs.scanLeft(0L)((acc, v) => acc + v.fold(0L)(x => roundHalfUp(x * x / grain)))
+      val first = vs.indexWhere(_.isDefined) match { case -1 => cnt; case i => i }
+      (nWin until cnt).map { rn =>
+        (c, rs(rn - 1)._2 - window / 2,
+          if (rn <= first) None else Some(math.sqrt((cum(rn) - cum(rn - nWin)).toDouble * grain / nWin)))
       }
+    }
+    assert(got.length == expect.length)
+    assert(got.count(_._1 == "none") == 12 && got.filter(_._1 == "none").forall(_._3.isEmpty))
+    assert(got.count(r => r._1 == "ch" && r._3.isEmpty) == 3) // rn 8 to 10
+    got.zip(expect).foreach { case ((cg, tg, vg), (ce, te, ve)) =>
+      assert(cg == ce && tg == te &&
+        vg.map(java.lang.Double.doubleToLongBits) == ve.map(java.lang.Double.doubleToLongBits),
+        s"movRms divergence at $cg t=$tg: plan=$vg replay=$ve")
     }
   }
 
@@ -313,16 +349,20 @@ class Round16Spec extends AnyFunSuite {
       assert(joined.count() === 2000)
       assert(shuffles(finalPlan(joined)).isEmpty,
         "bucketed join shuffled at 200 partitions under AQE")
-      // and the signal tier's samplerate dim join still broadcasts
+      // and the signal tier's channel-origin dim join still broadcasts
       // (partition count must not demote it to a 200-task SMJ)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcastWas)
-      val ch = (0 until 3).flatMap(c => (0 until 2000).map(k =>
-        (s"c$c", k * 0.5, math.sin(k / 7.0 + c)))).toDF("channel", "t", "v")
-      // threshold 1: the windowed plan, the one with the join
-      val mr = Signal(ch).movRms(4.0, 1L).df
-      mr.count()
-      val bhj = finalPlan(mr).collect { case b: BroadcastHashJoinExec => b }
-      assert(bhj.nonEmpty, "movRms samplerate join lost its broadcast at 200 partitions")
+      val evDir = java.nio.file.Files.createTempDirectory("r16_events_")
+      try {
+        (0 until 3).flatMap(c => (0 until 2000).map(k =>
+          (s"c$c", new java.sql.Timestamp(1700000000000L + c * 1000L + k * 500L),
+            math.sin(k / 7.0 + c)))).toDF("event_type", "ts", "value")
+          .write.parquet(s"$evDir/events.parquet")
+        val ev = graft.signal.Channels.events(spark, evDir.toString)
+        ev.count()
+        val bhj = finalPlan(ev).collect { case b: BroadcastHashJoinExec => b }
+        assert(bhj.nonEmpty, "channel-origin join lost its broadcast at 200 partitions")
+      } finally org.apache.commons.io.FileUtils.deleteDirectory(evDir.toFile)
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", spWas)
       spark.conf.set("spark.sql.adaptive.enabled", aqeWas)

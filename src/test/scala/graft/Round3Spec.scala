@@ -143,16 +143,17 @@ class Round3Spec extends AnyFunSuite {
     intercept[Exception] {
       graft.ops.Interp.interp1dSpline(src, oor, "cubic", boundsError = true).collect()
     }
-    // a channel longer than chunkKnots (8192): the gathered resample
-    // solves it whole, the chunked plan (gate threshold 1) in chunks
-    // with 128-knot margins; they agree within the margin bound
+    // a channel longer than chunkKnots (8192): the resample solves it
+    // whole, interp1d at the same grid in chunks with 128-knot
+    // margins; they agree within the margin bound
     val longN = 9000
     val longSrc = (0 until longN).map(k => ("long", k * 0.25,
       math.sin(k * 0.01) + 0.2 * rng.nextDouble())).toDF("channel", "t", "v")
-    def resampled(max: Long) = graft.ops.Interp.resample(longSrc, 3.0, "cubic", max)
+    val wholeLong = graft.ops.Interp.resample(longSrc, 3.0, "cubic")
       .collect().map(r => r.getDouble(1) -> r.getDouble(2)).toMap
-    val wholeLong = resampled(graft.ops.PerChannel.GatherMaxSamples)
-    val chunkedLong = resampled(1L)
+    val chunkedLong = graft.ops.Interp.interp1d(longSrc,
+        graft.ops.Interp.resampleGrid(longSrc, 1.0 / 3.0), "cubic")
+      .collect().map(r => r.getDouble(1) -> r.getDouble(2)).toMap
     assert(wholeLong.size == math.ceil((longN - 1) * 0.25 * 3.0).toInt)
     assert(chunkedLong.keySet == wholeLong.keySet)
     chunkedLong.foreach { case (t, v) =>

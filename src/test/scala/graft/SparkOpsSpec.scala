@@ -107,30 +107,20 @@ class SparkOpsSpec extends AnyFunSuite {
     val fs = 1024.0
     val n = 4096
     val sig = sine("w", 1.0, 64.0, fs, n)
-    // both sides of the channel-size gate: gathered (default) and
-    // segmented (threshold 1) sub-PSDs are bit-identical
-    def subPsd(max: Long) = Psd.welchAllWithSegRms(sig, 1.0, 0.5, "hann", "constant", max)
-    def sortedRows(d: DataFrame) = d.collect().map(_.toString).sorted.toSeq
-    assert(sortedRows(subPsd(graft.ops.PerChannel.GatherMaxSamples)) == sortedRows(subPsd(1L)))
-    for (max <- Seq(graft.ops.PerChannel.GatherMaxSamples, 1L)) {
-      val welch =
-        if (max == graft.ops.PerChannel.GatherMaxSamples) Psd.welch(sig, windowLength = 1.0, overlap = 0.5)
-        else Psd.summarizeAll(subPsd(max).drop("seg_rms"), "mean")
-      val dist = welch
-        .collect().map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1)
-      // single-node reference with the same kernels
-      val x = Array.tabulate(n)(i => math.sin(2 * math.Pi * 64.0 * i / fs))
-      val nw = 1024
-      val starts = graft.dsp.Spectral.welchStarts(n, nw, 512)
-      val subs = starts.map(s => graft.dsp.Spectral.periodogram(
-        x.slice(s, s + nw), fs, "hann", "constant")._2)
-      val mean = Array.tabulate(nw / 2 + 1)(k => subs.map(_(k)).sum / subs.length)
-      val freqs = graft.dsp.FFT.rfftfreq(nw, fs)
-      assert(dist.length == freqs.length)
-      dist.zip(freqs.zip(mean)).foreach { case ((fg, pg), (fe, pe)) =>
-        assert(math.abs(fg - fe) < 1e-9)
-        assert(math.abs(pg - pe) < 1e-9, s"freq $fe: $pg vs $pe")
-      }
+    val dist = Psd.welch(sig, windowLength = 1.0, overlap = 0.5)
+      .collect().map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1)
+    // single-node reference with the same kernels
+    val x = Array.tabulate(n)(i => math.sin(2 * math.Pi * 64.0 * i / fs))
+    val nw = 1024
+    val starts = graft.dsp.Spectral.welchStarts(n, nw, 512)
+    val subs = starts.map(s => graft.dsp.Spectral.periodogram(
+      x.slice(s, s + nw), fs, "hann", "constant")._2)
+    val mean = Array.tabulate(nw / 2 + 1)(k => subs.map(_(k)).sum / subs.length)
+    val freqs = graft.dsp.FFT.rfftfreq(nw, fs)
+    assert(dist.length == freqs.length)
+    dist.zip(freqs.zip(mean)).foreach { case ((fg, pg), (fe, pe)) =>
+      assert(math.abs(fg - fe) < 1e-9)
+      assert(math.abs(pg - pe) < 1e-9, s"freq $fe: $pg vs $pe")
     }
   }
 

@@ -67,22 +67,19 @@ class SplineSpec extends AnyFunSuite {
     val rng = new scala.util.Random(11)
     val ys = Array.fill(50)(rng.nextDouble() * 4 - 2)
     val df = xs.zip(ys).toSeq.map { case (t, v) => ("c", t, v) }.toDF("channel", "t", "v")
-    // both sides of the channel-size gate: the gathered whole-channel
-    // solve (default threshold) and the chunked plan (threshold 1) are
-    // bit-identical on a channel of at most chunkKnots samples
-    def resampled(max: Long) = graft.ops.Interp.resample(df, 2.0, "cubic", max)
+    val got = graft.ops.Interp.resample(df, 2.0, "cubic")
       .collect().map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1)
-    val gathered = resampled(graft.ops.PerChannel.GatherMaxSamples)
-    val chunked = resampled(1L)
-    assert(gathered.toSeq == chunked.toSeq)
     val grid = graft.dsp.SigMath.arange(0.0, xs.last, 0.5)
     val expect = CubicSpline.interpolate(xs, ys, grid)
-    for (got <- Seq(gathered, chunked)) {
-      assert(got.length == grid.length)
-      got.zip(grid.zip(expect)).foreach { case ((tg, vg), (te, ve)) =>
-        assert(math.abs(tg - te) < 1e-12)
-        assert(math.abs(vg - ve) < 1e-10, s"at $te: $vg vs $ve")
-      }
+    assert(got.length == grid.length)
+    got.zip(grid.zip(expect)).foreach { case ((tg, vg), (te, ve)) =>
+      assert(math.abs(tg - te) < 1e-12)
+      assert(math.abs(vg - ve) < 1e-10, s"at $te: $vg vs $ve")
     }
+    // the chunk-parallel interp1d at the same grid: one chunk on 50
+    // knots, so the same solve, bit for bit
+    val chunked = graft.ops.Interp.interp1d(df, graft.ops.Interp.resampleGrid(df, 0.5), "cubic")
+      .collect().map(r => (r.getDouble(1), r.getDouble(2))).sortBy(_._1)
+    assert(chunked.toSeq == got.toSeq)
   }
 }
