@@ -399,7 +399,8 @@ object Signal {
   val GrainDenom: Double = 4611686018427387904.0 // = 2^62, exactly representable
 
   /** The single grain derivation both integer accumulators use —
-    * Column form for the plans, scalar form for in-JVM replays
+    * Column form for `integralExact`'s plan, scalar form
+    * ([[grainOf]]) for the `movRms` kernel and in-JVM replays
     * (Round16Spec pins the two bit-identical, and pins the int64
     * bound across channel lengths far past the old 2^28 envelope).
     * Operand order matters: (scale · cnt) / 2^62, left-associative,
