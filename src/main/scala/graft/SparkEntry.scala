@@ -1210,13 +1210,13 @@ object SparkEntry {
         .na.fill(0, Seq("n_candidates"))
     }),
     "q_dedup_components" -> ((s, dir) =>
-      // near-dup clusters: shared LSH candidate pairs -> min-label
-      // propagation + pointer jump to fixpoint (convergence-counted,
-      // checkpointed). maxIters MUST equal CC_ORACLE_ROUNDS (see
-      // dedupComponentsSql). Computed FRESH each call — NOT via the
-      // components memo — so the benched number is the real fixpoint
-      // iteration, not a cache read; q_dedup_keep measures the
-      // compute-once/read-many consumption side instead
+      // near-dup clusters: shared LSH candidate pairs -> star
+      // contraction to fixpoint (rounds counted; node maps on the
+      // driver under the counted node gate). maxIters MUST equal
+      // CC_ORACLE_ROUNDS (see dedupComponentsSql). Computed FRESH each
+      // call — NOT via the components memo — so the benched number is
+      // the real fixpoint iteration, not a cache read; q_dedup_keep
+      // measures the compute-once/read-many consumption side instead
       Dedup.connectedComponents(lshCands(s, dir), maxIters = CC_ORACLE_ROUNDS,
         verbose = ccVerbose)),
     "q_dedup_keep" -> ((s, dir) =>
@@ -4043,17 +4043,18 @@ object SparkEntry {
        |       count(*) AS n_members, count(*) - 8 AS n_starred
        |FROM bands GROUP BY band, bsig HAVING count(*) > 8""".stripMargin
 
-  /** Min-label + two-sided chained pointer-jump replay.
-    * Dedup.connectedComponents iterates `min(label, nmin = min
-    * neighbor labels, label(nmin), label^4)` to fixpoint BOUNDED BY
-    * maxIters, and the oracle unrolls exactly that bound: if Spark
-    * converged in r* < maxIters rounds, the oracle's extra rounds are
-    * no-ops (labels already stable); if Spark hit the bound, both
-    * engines ran the identical maxIters synchronous rounds — equal
-    * either way. This constant MUST stay equal to the maxIters the
+  /** Min-label + two-sided chained pointer-jump replay. The oracle
+    * unrolls `min(label, nmin = min neighbor labels, label(nmin),
+    * label^4)` for CC_ORACLE_ROUNDS synchronous rounds; post-
+    * convergence rounds are no-ops. Dedup.connectedComponents runs a
+    * different recurrence (star contraction with t^64 compression,
+    * bounded by maxIters), and the two agree only at the fixpoint: once
+    * both have converged every doc carries its component minimum.
+    * This constant MUST stay equal to the maxIters the
     * q_dedup_components query uses — AND the bound must never
-    * actually bind: a capped run ships under-merged labels that the
-    * oracle happily replays (a green row encoding a wrong answer).
+    * actually bind on either side: a capped run ships under-merged
+    * labels (a wrong answer, and one the other recurrence would not
+    * reproduce).
     * Round 6 learned this the hard way: 8 rounds, chosen from the
     * idealized ">= 4x+1 coverage per round" model, left sf0.1's
     * candidate graph un-converged (round 8 still relabeled 15 nodes).

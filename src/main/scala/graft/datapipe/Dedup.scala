@@ -1,8 +1,14 @@
 package graft.datapipe
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.{ArrayBuffer, LongMap}
+
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines: exact
   * (fingerprint groupBy), MinHash+LSH, SimHash, and n-gram Jaccard.
@@ -690,29 +696,32 @@ object Dedup {
     */
   val lastCcRounds = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Node-count gate for broadcasting the per-round contraction map
-    * inside `connectedComponents`: 2M (node, tgt) long pairs is
-    * ~32 MB framed — safely inside any executor/driver budget — while
-    * a 100 TB candidate graph's quotient (billions of nodes in early
-    * rounds) correctly falls back to shuffle joins. Counted against
-    * the MATERIALIZED hop table, never estimated.
+  /** Node-count gate of `connectedComponents`: a per-round node map
+    * (t, f = t^64, the resolved labels) of at most this many entries
+    * lives on the driver; a larger one stays a checkpointed table
+    * joined by shuffle. 2M (node, tgt) long pairs is ~32 MB — safely
+    * inside any driver budget — while a 100 TB candidate graph's
+    * quotient (billions of nodes in early rounds) stays distributed.
+    * Counted, never estimated.
     */
   val CcBroadcastMaxNodes: Long = 2000000L
 
   /** Near-duplicate CLUSTERS from candidate pairs by STAR CONTRACTION
     * with capped path compression, iterated until the quotient graph
-    * has no edges: each round every node points at the minimum of its
-    * closed neighborhood (t(x) = min(x, min neighbor id)), the
-    * t-forest is path-compressed by composition squaring (f = t^64,
-    * 6 self-joins of the materialized hop table), the edge set is
-    * CONTRACTED to the quotient f(E) (self-loops dropped, dedup'd),
-    * and the resolved-label map folds f in (M' = f ∘ M). Rounds scale
-    * as ~log2(diameter) because each later hop crosses QUOTIENT edges
-    * — many original edges at once — where plain min-label flooding
-    * (the pre-r18 form) needed one original edge hop per round
-    * (measured: identical per-round convergence under label^4 and
-    * label^16 pointer jumps, i.e. diameter-bound; the sf0.1 candidate
-    * graph took 9 full-table rounds vs 3 contraction rounds).
+    * has no edges. Each round:
+    *   - t(x) = min(x, min neighbour id), one aggregate over the live
+    *     edges;
+    *   - f = t^64, path compression of the t-forest by six composition
+    *     squarings;
+    *   - E' = f(E) with self-loops dropped and duplicates removed: the
+    *     QUOTIENT graph the next round works on;
+    *   - M = f ∘ M, the resolved-label map.
+    * Rounds scale as ~log2(diameter) because each later hop crosses
+    * quotient edges — many original edges at once — where min-label
+    * flooding (the pre-r18 form) needed one original edge hop per
+    * round (the sf0.1 candidate graph took 9 full-table rounds against
+    * 3 contraction rounds); star contraction after Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond".
     *
     * Correctness: t maps every node to a node of its own component
     * and t(z) <= z, so f = t^64 and every composed M keep the
@@ -724,28 +733,43 @@ object Dedup {
     * propagation. Every component — any diameter — ends carrying its
     * minimum doc_id.
     *
-    * Scale shape: per round, one edge-table min-aggregate, 6
-    * node-sized compression self-joins, a two-sided remap join of the
-    * current (shrinking) edge set + distinct, and one map-sized
-    * fold-in join; no driver-side union-find. The quotient edge set
-    * shrinks geometrically, so later rounds touch a vanishing
-    * fraction of the graph (the pre-r18 form re-joined the FULL label
-    * table every round for diameter rounds). Each round's tables are
-    * checkpointed: that materialization is the action the
-    * progress count reads anyway, and it truncates the per-round join
-    * lineage. `maxIters` is a runaway guard — hitting the bound with
-    * edges remaining leaves deterministic, conservatively
-    * under-merged labels, i.e. a WRONG answer that callers must treat
-    * as a failure: check `lastCcRounds < maxIters` after any run
-    * whose labels feed a dedup decision.
+    * Where the state lives: the edge table is always distributed. A
+    * node map whose counted size is at most `CcBroadcastMaxNodes`
+    * lives on the driver, a larger one is a checkpointed table joined
+    * by shuffle:
+    *   - below the gate each round collects t in ONE job (the collect
+    *     also proves the count, and an empty t ends the loop),
+    *     squares and folds on the driver, and remaps the live edge
+    *     pair RDD on the executors through one broadcast variable; the
+    *     labels come back through `parallelize`. A graph under the gate
+    *     costs rounds + 1 jobs, plus the caller's action on the labels;
+    *   - above the gate t, f and the labels are checkpointed tables and
+    *     every join shuffles; node counts only shrink under
+    *     contraction, so the first round whose t counts under the gate
+    *     moves to the driver form for the rest of the run.
+    * The fixpoint of a graph above the gate therefore never sits on
+    * the driver.
     *
-    * CHECKPOINT DURABILITY: the default `localCheckpoint` stores
-    * blocks only on executors, with no lineage to recompute them — a
-    * lost executor mid-iteration fails the job. Fine on local mode
-    * and for fixture-scale runs; for a long cluster iteration pass
-    * `checkpointDir` to write round labels through the reliable
-    * checkpoint path (HDFS/object store) instead, which survives
-    * executor loss at the cost of one FS round-trip per round.
+    * `maxIters` is a runaway guard — hitting the bound with edges
+    * remaining leaves deterministic, conservatively under-merged
+    * labels, i.e. a WRONG answer that callers must treat as a failure:
+    * check `lastCcRounds < maxIters` after any run whose labels feed a
+    * dedup decision. An edgeless graph reports one round, the one that
+    * found no edges.
+    *
+    * CHECKPOINT DURABILITY (above the gate): the default
+    * `localCheckpoint` stores round tables only on executors, with no
+    * lineage to recompute them — a lost executor mid-iteration fails
+    * the job. Pass `checkpointDir` to write them through the reliable
+    * checkpoint path (HDFS/object store) instead, at the cost of one
+    * FS round-trip per round. Below the gate the quotient RDDs keep
+    * their (rounds-deep) lineage and `checkpointDir` is not used.
+    *
+    * Everything a run persists or broadcasts for its own rounds — the
+    * edge table, the quotient RDDs, the per-round broadcasts — is
+    * released before it returns. Above the gate the checkpointed round
+    * maps the labels are read from stay until the context cleaner
+    * reclaims them with the returned frame.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 16,
                           verbose: Boolean = false,
@@ -760,174 +784,196 @@ object Dedup {
     */
   def connectedComponentsCounted(pairs: DataFrame, maxIters: Int = 16,
                                  verbose: Boolean = false,
-                                 checkpointDir: Option[String] = None): (DataFrame, Int) = {
-    val sc = pairs.sparkSession.sparkContext
+                                 checkpointDir: Option[String] = None): (DataFrame, Int) =
+    components(pairs, maxIters, verbose, checkpointDir, CcBroadcastMaxNodes)
+
+  /** `connectedComponentsCounted` with the node gate as a parameter,
+    * so one graph can run on either side of it or switch mid-run.
+    */
+  private[graft] def components(pairs: DataFrame, maxIters: Int, verbose: Boolean,
+                                checkpointDir: Option[String],
+                                driverMaxNodes: Long): (DataFrame, Int) = {
+    val sp = pairs.sparkSession
+    val sc = sp.sparkContext
     checkpointDir.foreach(d => if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d))
-    // STATS SHEDDING (the actual fix for round 6's 28x regression):
-    // Dataset.checkpoint carries the origin plan's estimated
-    // Statistics into the checkpointed LogicalRDD, so planners keep
-    // size information across a checkpoint. For an ITERATED fixpoint
-    // that is a time bomb: sizeInBytes is a BigInt PRODUCT across
-    // each round's six label-table joins, so the carried estimate's
-    // digit count grows ~6x per round and by round 8 the stats
-    // visitor is multiplying million-digit BigIntegers on the driver
-    // — super-linear per-round wall time with flat executor load
-    // (jstack: SizeInBytesOnlyStatsPlanVisitor -> BigInteger
-    // .multiplyToomCook3). Rebuilding the frame from the
-    // checkpointed RDD sheds the origin stats: each round restarts
-    // from leaf defaults, and nothing is lost — every CC join is an
-    // intentional shuffle join on conservative estimates anyway. The
-    // two narrow row-conversion maps this adds are per-label-row,
-    // negligible next to the round's joins at any graph size.
-    def ckpt(df: DataFrame, eager: Boolean): DataFrame = {
+    // STATS SHEDDING: Dataset.checkpoint carries the origin plan's
+    // estimated Statistics into the checkpointed LogicalRDD. For an
+    // iterated fixpoint sizeInBytes is a BigInt PRODUCT across each
+    // round's joins, so its digit count grows every round until the
+    // stats visitor multiplies million-digit BigIntegers on the driver
+    // (round 6's 28x regression; jstack: SizeInBytesOnlyStatsPlanVisitor
+    // -> BigInteger.multiplyToomCook3). Rebuilding the frame from the
+    // checkpointed RDD restarts each round from leaf defaults, and
+    // every join above the gate is an intentional shuffle join anyway.
+    def ckpt(df: DataFrame): DataFrame = {
       val snap =
-        if (checkpointDir.isDefined) df.checkpoint(eager)
-        else df.localCheckpoint(eager)
-      df.sparkSession.createDataFrame(snap.rdd, snap.schema)
+        if (checkpointDir.isDefined) df.checkpoint(eager = true)
+        else df.localCheckpoint(eager = true)
+      sp.createDataFrame(snap.rdd, snap.schema)
     }
-    // every round references the edge list, and Spark re-runs its
-    // lineage (here: the whole LSH candidate pipeline) per reference —
-    // cache the skinny pair table once; it is candidate-sized, far
-    // smaller than the corpus, and unpersisted before returning.
-    // CACHE, deliberately not checkpoint: the InMemoryRelation keeps
-    // REAL size statistics, so each round's edge⋈labels join plans as
-    // a broadcast of the small cached table; A/B-measured at sf0.1,
-    // swapping this for a stats-less checkpoint doubled every round
-    // (~450 ms → ~1 s) by forcing both join sides through a shuffle.
-    val edges = pairs.select(col("a").as("x"), col("b").as("y"))
-      .unionAll(pairs.select(col("b").as("x"), col("a").as("y")))
-      .cache()
-    // STAR CONTRACTION with capped path compression (r18 rewrite —
-    // guide §1.2 "the distributed algorithm"). The old round (min
-    // over neighbors' labels + pointer jumps on the start-of-round
-    // label table) converged in DIAMETER rounds: measured with
-    // GRAFT_CC_VERBOSE, its per-round changed counts were IDENTICAL
-    // under label^4 and label^16 jumps — pointer jumping cannot
-    // accelerate a minimum that still has to FLOOD outward one edge
-    // per round, so the sf0.1 candidate graph took 9 full-table
-    // rounds. This form instead contracts the GRAPH each round:
-    //   t(x) = min(x, min of x's neighbors)   — one aggregate, ids
-    //   f    = t^64                           — capped compression of
-    //          the t-forest (t(z) <= z), 6 self-joins of the
-    //          MATERIALIZED t leaf (squaring an unmaterialized plan
-    //          re-evaluates the aggregate 2^k times — measured 9x
-    //          per-round cost before the ckpt was added)
-    //   E'   = f(E) with self-loops dropped, dedup'd — the QUOTIENT
-    //   M    = f ∘ M                          — resolved-label map
-    // Each subsequent round's single hop crosses quotient edges =
-    // many original edges, so rounds ~ log2(diameter) instead of
-    // diameter (star contraction à la Kiveris et al., "Connected
-    // Components in MapReduce and Beyond"), and the edge set SHRINKS
-    // geometrically — at 100 TB the later rounds run over a
-    // vanishing fraction of the candidate graph where the old form
-    // re-joined the full label table every round. f maps every node
-    // into its own component and f(z) <= z, so M keeps the min-label
-    // invariant; when E' is empty every component has contracted to
-    // exactly its minimum id (the min is a fixed point of t and
-    // survives every round), giving the identical fixpoint labels.
-    // maxIters stays the runaway guard: the t^64 cap covers >= 64
-    // hops per round even on an adversarially-ordered chain, far
-    // beyond any real candidate-graph diameter.
-    val nodes = ckpt(edges.select(col("x").as("doc_id")).distinct(),
-      eager = true)
-    // per-round contraction maps, resolved ONCE after the loop: the
-    // map composition m = f_r ∘ … ∘ f_1 needs no per-round
-    // materialization (each f is a checkpointed leaf and the round
-    // count is ~log2(diameter)), so deferring it drops one eager-
-    // checkpoint job per round from the critical path (r18: the
-    // per-round cost at fixture scale is serialized tiny-job latency,
-    // not data)
-    // (round map, was-this-round-under-the-broadcast-gate): the flag
-    // rides per round because node counts SHRINK — a late round under
-    // the gate says nothing about round 1's map size
-    val fs = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Boolean)]
-    var live = edges
-    var nEdges = 1L
+    // the labels keep the pair columns' nullability
+    val nullableIds = pairs.schema("a").nullable || pairs.schema("b").nullable
+    // the symmetric edge list, persisted once: round 1 reads it twice
+    // (t and the contraction), and each read would otherwise re-run
+    // its lineage (the whole LSH candidate pipeline)
+    val edges = pairs.select(col("a").cast("long"), col("b").cast("long")).rdd
+      .flatMap { r => val a = r.getLong(0); val b = r.getLong(1); Iterator((a, b), (b, a)) }
+      .setName("cc edges").persist(StorageLevel.MEMORY_AND_DISK)
+    val held = ArrayBuffer[RDD[_]](edges)
+    val bcs = ArrayBuffer.empty[Broadcast[_]]
+    // below the gate: live edges as a pair RDD, and the labels of the
+    // nodes of the first driver round's t
+    var live: RDD[(Long, Long)] = edges
+    var labels: Option[LongMap[Long]] = None
+    // above the gate: live edges as a table, round 1's nodes, and the
+    // checkpointed round maps
+    var table: Option[DataFrame] = None
+    var nodes: Option[DataFrame] = None
+    val fs = ArrayBuffer.empty[DataFrame]
+    // t as a checkpointed leaf: squaring an unmaterialized plan would
+    // re-evaluate the aggregate 2^k times
+    def hops(df: DataFrame): DataFrame =
+      ckpt(df.groupBy("x").agg(min("y").as("ny"))
+        .select(col("x").as("node"), least(col("x"), col("ny")).as("tgt")))
     var round = 0
-    // COUNTED broadcast gate (the pairOverlap discipline: counts,
-    // never estimates — checkpointed leaves have no stats, so the
-    // planner would shuffle-join these node-sized tables at any
-    // size). Node counts only SHRINK under contraction, so once a
-    // round is below the gate every later round is too and the count
-    // job is skipped.
-    var bcOk = false
-    while (nEdges > 0 && round < maxIters) {
-      round += 1
+    var done = false
+    while (!done && round < maxIters) {
       val t0 = System.nanoTime()
-      def lap(label: String, since: Long): Long = {
-        val now = System.nanoTime()
-        if (verbose) System.err.println(
-          f"[cc]   round $round $label%-10s ${(now - since) / 1e6}%.0f ms")
-        now
+      // this round's t: Left on the driver, Right a checkpointed table
+      val t: Either[LongMap[Long], DataFrame] = table match {
+        case None => driverHops(live, driverMaxNodes).toLeft {
+          // only round 1 can be above the gate here
+          val df = sp.createDataFrame(edges.map { case (x, y) => Row(x, y) },
+            idPairSchema("x", "y", nullableIds))
+          table = Some(df)
+          hops(df)
+        }
+        case Some(df) =>
+          val tt = hops(df)
+          if (tt.count() > driverMaxNodes) Right(tt)
+          else {
+            table = None
+            live = df.rdd.map(r => (r.getLong(0), r.getLong(1)))
+            Left(LongMap.from(tt.collect().iterator.map(r => r.getLong(0) -> r.getLong(1))))
+          }
       }
-      // one edge hop: t over node IDS of the current quotient graph
-      val t = ckpt(live.groupBy("x").agg(min("y").as("ny"))
-        .select(col("x").as("node"), least(col("x"), col("ny")).as("tgt")),
-        eager = true)
-      val l1 = lap("t", t0)
-      if (!bcOk) bcOk = t.count() <= CcBroadcastMaxNodes
-      val l2 = lap("gate", l1)
-      def maybeBc(df: DataFrame): DataFrame = if (bcOk) broadcast(df) else df
-      // capped compression: f = t^64 by composition squaring over the
-      // materialized leaf (6 squarings; every tgt is a node in t, so
-      // each inner join is total). NOTE (r19, measured and reverted):
-      // reducing to 3 squarings (t^8) cut each round's f job ~25% on
-      // the fixture graphs (identical round counts — real candidate
-      // t-forests are star-shaped), but on a MONOTONE-ID CHAIN the
-      // t-forest is one path and contraction shrinks ADDITIVELY by
-      // the compression depth per round, not multiplicatively: the
-      // 100-node path took 13 rounds at t^8 and a 500-node path blew
-      // the maxIters=16 runaway guard (both pinned by tests). Depth
-      // 64 is what makes worst-case chains converge inside the guard;
-      // it stays.
-      var f = t
-      for (_ <- 1 to 6) {
-        f = f.join(
-            maybeBc(f.select(col("node").as("n2"), col("tgt").as("t2"))),
-            col("tgt") === col("n2"))
-          .select(col("node"), col("t2").as("tgt"))
+      t match {
+        case Left(tm) if tm.isEmpty => done = true
+        case Left(tm) =>
+          round += 1
+          // capped compression: f = t^64 by six composition squarings
+          // (every tgt is a node of t, so each lookup is total). NOTE
+          // (r19, measured and reverted): t^8 cut each round's cost on
+          // the fixture graphs, but on a MONOTONE-ID CHAIN the t-forest
+          // is one path and contraction shrinks ADDITIVELY by the
+          // compression depth per round: the 100-node path took 13
+          // rounds and a 500-node path blew the maxIters=16 guard (both
+          // pinned by tests). Depth 64 stays.
+          var f = tm
+          for (_ <- 1 to 6) { val g = f; f = g.mapValuesNow(g) }
+          val m = labels.getOrElse(LongMap.from(tm.keysIterator.map(x => x -> x)))
+          labels = Some(m.mapValuesNow(l => f.getOrElse(l, l)))
+          val bc = sc.broadcast(f)
+          bcs += bc
+          live = live.map { case (x, y) => val g = bc.value; (g(x), g(y)) }
+            .filter { case (x, y) => x != y }.distinct()
+            .setName(s"cc quotient $round").persist(StorageLevel.MEMORY_AND_DISK)
+          held += live
+        case Right(tt) =>
+          round += 1
+          if (nodes.isEmpty) nodes = Some(tt.select(col("node").as("doc_id")))
+          var f = tt
+          for (_ <- 1 to 6) {
+            f = f.join(f.select(col("node").as("n2"), col("tgt").as("t2")),
+                col("tgt") === col("n2"))
+              .select(col("node"), col("t2").as("tgt"))
+          }
+          f = ckpt(f)
+          fs += f
+          table = table.map(df => ckpt(df
+            .join(f.select(col("node").as("x"), col("tgt").as("fx")), "x")
+            .join(f.select(col("node").as("y"), col("tgt").as("fy")), "y")
+            .select(col("fx").as("x"), col("fy").as("y"))
+            .filter(col("x") =!= col("y"))
+            .distinct()))
       }
-      f = ckpt(f, eager = true)
-      fs += ((f, bcOk))
-      val l3 = lap("f", l2)
-      // contract the quotient graph; the eager checkpoint is the
-      // round's materialization action and the count reads its blocks
-      live = ckpt(live
-        .join(maybeBc(f.select(col("node").as("x"), col("tgt").as("fx"))), "x")
-        .join(maybeBc(f.select(col("node").as("y"), col("tgt").as("fy"))), "y")
-        .select(col("fx").as("x"), col("fy").as("y"))
-        .filter(col("x") =!= col("y"))
-        .distinct(), eager = true)
-      val l4 = lap("contract", l3)
-      nEdges = live.count()
-      lap("count", l4)
-      // observability: quotient-size progress + per-round wall time
-      // are the dials that say whether maxIters is sized right —
+      // observability: per-round wall time and where the round ran —
       // gated off by default (a library must not write to stderr)
-      if (verbose) System.err.println(
-        f"[cc] round $round quotient_edges=$nEdges ${(System.nanoTime() - t0) / 1e6}%.0f ms")
+      if (verbose) System.err.println(f"[cc] round $round " +
+        f"${if (t.isLeft) "driver" else "table"} ${(System.nanoTime() - t0) / 1e6}%.0f ms")
     }
-    lastCcRounds.set(round)
-    // resolve every original node through the round maps: nodes
-    // absent from a round's f (no surviving edges) keep their current
-    // label via the left join — identical math to a per-round fold.
-    // The round maps are checkpointed (stats-less) leaves, so without
-    // a hint the planner shuffle-joins the node table against every
-    // one of them; under the SAME counted gate as the loop joins the
-    // maps broadcast instead (merge-sized, already counted ≤ the
-    // gate), removing two exchanges per round map from the tail (r19).
-    val m = fs.zipWithIndex.foldLeft(
-        nodes.withColumn("label", col("doc_id"))) { case (acc, ((f, small), i)) =>
-      val fm = f.select(col("node"), col("tgt").as(s"t$i"))
-      acc.join(if (small) broadcast(fm) else fm,
-          acc("label") === col("node"), "left")
-        .select(col("doc_id"), coalesce(col(s"t$i"), col("label")).as("label"))
+    val rounds = if (round == 0) math.min(1, maxIters) else round
+    lastCcRounds.set(rounds)
+    val out = nodes match {
+      case None =>
+        val m = labels.getOrElse(LongMap.empty[Long])
+        val size = LongMap.empty[Long]
+        m.foreachValue(l => size(l) = size.getOrElse(l, 0L) + 1L)
+        val rows = m.iterator.map { case (d, l) => Row(d, l, size(l)) }.toVector
+        sp.createDataFrame(sc.parallelize(rows, sc.defaultParallelism),
+          StructType(idPairSchema("doc_id", "component", nullableIds).fields :+
+            StructField("n_members", LongType, nullable = false)))
+      case Some(n) =>
+        // resolve every node through the round maps (a label absent
+        // from a map keeps its value: the left join), then through the
+        // driver rounds' labels if the run crossed the gate
+        val tail = labels.map(m => sp.createDataFrame(
+          sc.parallelize(m.iterator.map { case (x, l) => Row(x, l) }.toVector, sc.defaultParallelism),
+          idPairSchema("node", "tgt", nullable = false)))
+        val m = (fs ++ tail).zipWithIndex.foldLeft(n.withColumn("label", col("doc_id"))) {
+          case (acc, (f, i)) =>
+            acc.join(f.select(col("node"), col("tgt").as(s"t$i")),
+                acc("label") === col("node"), "left")
+              .select(col("doc_id"), coalesce(col(s"t$i"), col("label")).as("label"))
+        }
+        m.select(col("doc_id"), col("label").as("component"),
+          count(lit(1)).over(Window.partitionBy("label")).as("n_members"))
     }
-    // m's lineage is `rounds` joins over checkpointed leaves — bounded
-    // and shallow; the cached pair table is no longer referenced
-    edges.unpersist(blocking = false)
-    (m.select(col("doc_id"), col("label").as("component"),
-      count(lit(1)).over(Window.partitionBy("label")).as("n_members")), round)
+    // the labels read neither the edge and quotient RDDs nor the
+    // broadcasts: release them now instead of at the next GC
+    held.foreach(_.unpersist(blocking = false))
+    bcs.foreach(_.destroy())
+    (out, rounds)
+  }
+
+  private def idPairSchema(a: String, b: String, nullable: Boolean): StructType =
+    StructType(Seq(StructField(a, LongType, nullable), StructField(b, LongType, nullable)))
+
+  /** t(x) = min(x, min neighbour) of the live edges, collected to the
+    * driver in one job if it has at most `maxNodes` entries; None
+    * (nothing kept) above that. Each task ships its partition only up
+    * to twice an even share of the gate (hash partitions are near
+    * even) and its count otherwise, so far above the gate the driver
+    * receives about two gates' worth, never the whole map; a partition
+    * skewed past its share while the total is under the gate costs one
+    * more collect.
+    */
+  private[graft] def driverHops(live: RDD[(Long, Long)], maxNodes: Long): Option[LongMap[Long]] = {
+    val hop = live.reduceByKey((a, b) => math.min(a, b))
+      .map { case (x, ny) => (x, math.min(x, ny)) }
+    val share = maxNodes / math.max(hop.getNumPartitions, 1)
+    val cap = if (share > maxNodes / 2) maxNodes else 2 * share
+    val got = LongMap.empty[Long]
+    var n = 0L
+    var skewed = false
+    live.sparkContext.runJob(hop, (it: Iterator[(Long, Long)]) => {
+      val buf = Array.newBuilder[Long]
+      var k = 0L
+      it.foreach { case (x, tx) => k += 1; if (k <= cap) { buf += x; buf += tx } }
+      (k, if (k <= cap) buf.result() else null)
+    }, (_: Int, part: (Long, Array[Long])) => {
+      n += part._1
+      if (n > maxNodes) got.clear()
+      else if (part._2 == null) skewed = true
+      else {
+        val kv = part._2
+        var i = 0
+        while (i < kv.length) { got(kv(i)) = kv(i + 1); i += 2 }
+      }
+    })
+    if (n > maxNodes) None
+    else if (skewed) Some(LongMap.from(hop.collect()))
+    else Some(got)
   }
 
   /** One row per w-token rolling window of the normalized text:
@@ -1471,7 +1517,7 @@ object Dedup {
     val edges = pairs.select(col("a"), col("b"))
     val rows = edges.limit(driverMaxEdges + 1).collect()
     if (rows.length <= driverMaxEdges) {
-      val parent = scala.collection.mutable.LongMap.empty[Long]
+      val parent = LongMap.empty[Long]
       def find(x: Long): Long = {
         var r = x
         while (parent.getOrElse(r, r) != r) r = parent(r)
