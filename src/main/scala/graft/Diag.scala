@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.datapipe.Dedup
@@ -17,27 +16,7 @@ import graft.datapipe.Dedup
 object Diag {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // 16 MB byte-range splits — fixture-shape, not engine tuning.
-      // The v5 fixtures are 32-file tables, but Spark PACKS small
-      // files into shared scan partitions by (size + 4 MB open cost),
-      // so at the default 128 MB a well-compressed 32-file table
-      // still lands in 1-2 partitions, single-threading every
-      // scan-side filter; 16 MB keeps those scans ~16-way. The r16
-      // 4 MB setting over-split EVERY scan (32x scheduling overhead
-      // on the tiny sf0.1 tables) and was part of the r16 bench
-      // regression. Production tables are many 128 MB+ files and
-      // split naturally at defaults.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     // --scan-shape <dir>: print per-table scan parallelism at the
     // harness split size (16 MB) and at the Spark default (128 MB) —
     // the r16 verdict #5 "fixtures must split without harness

@@ -28,15 +28,7 @@ object GenLongDocs {
     val src = if (args.length > 0) args(0) else "fixtures/sf1"
     val dst = if (args.length > 1) args(1) else "fixtures/longdocs"
     val groups = if (args.length > 2) args(2).toInt else 120
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
     generate(spark, src, dst, groups)
     spark.stop()
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump physical plans for representative queries so the
   * shuffle/pushdown/codegen structure can be reviewed
   * (`sbt "runMain graft.Plans <sfDir> <query...>"`).
@@ -12,25 +10,7 @@ object Plans {
     val names = if (args.length > 1) args.drop(1).toSeq
     else Seq("q01_pricing", "q03_region_revenue", "q_between", "q_movrms16",
       "q_resample_linear", "q_cosine_topk", "q_minhash_sig")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      // 16 MB byte-range splits — fixture-shape, not engine tuning.
-      // The v5 fixtures are 32-file tables, but Spark PACKS small
-      // files into shared scan partitions by (size + 4 MB open cost),
-      // so at the default 128 MB a well-compressed 32-file table
-      // still lands in 1-2 partitions, single-threading every
-      // scan-side filter; 16 MB keeps those scans ~16-way. The r16
-      // 4 MB setting over-split EVERY scan (32x scheduling overhead
-      // on the tiny sf0.1 tables) and was part of the r16 bench
-      // regression. Production tables are many 128 MB+ files and
-      // split naturally at defaults.
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

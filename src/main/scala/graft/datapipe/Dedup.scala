@@ -1,10 +1,11 @@
 package graft.datapipe
 
-import scala.collection.mutable.{ArrayBuffer, LongMap}
+import scala.collection.mutable.{ArrayBuffer, HashMap, LongMap}
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -390,24 +391,19 @@ object Dedup {
       .toDF("doc_id", "band", "sig")
   }
 
-  /** Exact Jaccard similarity over shingle sets for the given
-    * candidate pairs (the verify stage after LSH). Each document's
-    * set rides the pair join once as a sorted hash array — the
-    * exploded alternative (joining pairs against per-shingle rows)
-    * shuffles |pairs| x |shingles per doc| rows through a composite
-    * join and loses by the average shingle count per document.
-    */
-  def jaccardByArrays(shingleDf: DataFrame, pairs: DataFrame): DataFrame =
-    jaccardByHashes(shingleHashes(shingleDf), pairs)
-
-  /** Jaccard over a (possibly cached/shared) `shingleHashes` table:
-    * each document's set is its distinct h1 values (52-bit md5
-    * collisions are ~1e-11 per doc, so the count equals the string-set
-    * count), sorted once so the per-pair intersection is a primitive
-    * merge scan (built-in array_intersect builds a boxed hash set per
-    * ROW). The set table is doc-count-sized (small next to the pair
-    * list), so BROADCAST it: the skinny pair rows join map-side and
-    * the arrays are never shuffled at all.
+  /** Exact Jaccard similarity for the given candidate pairs (the
+    * verify stage after LSH) over a (possibly cached/shared)
+    * `shingleHashes` table. Each document's set rides the pair join
+    * once as a sorted hash array — the exploded alternative (joining
+    * pairs against per-shingle rows) shuffles |pairs| x |shingles per
+    * doc| rows through a composite join and loses by the average
+    * shingle count per document. The set is its distinct h1 values
+    * (52-bit md5 collisions are ~1e-11 per doc, so the count equals
+    * the string-set count), sorted once so the per-pair intersection
+    * is a primitive merge scan (built-in array_intersect builds a
+    * boxed hash set per ROW). The set table is doc-count-sized
+    * (small next to the pair list), so BROADCAST it: the skinny pair
+    * rows join map-side and the arrays are never shuffled at all.
     */
   def jaccardByHashes(hashes: DataFrame, pairs: DataFrame,
                       broadcastMaxDocs: Long = DefaultBroadcastMaxDocs,
@@ -767,9 +763,11 @@ object Dedup {
     *
     * Everything a run persists or broadcasts for its own rounds — the
     * edge table, the quotient RDDs, the per-round broadcasts — is
-    * released before it returns. Above the gate the checkpointed round
-    * maps the labels are read from stay until the context cleaner
-    * reclaims them with the returned frame.
+    * released before it returns. Above the gate each round's
+    * checkpointed t and edge table are released as soon as a newer
+    * checkpoint supersedes them; the f maps and round 1's t, which the
+    * labels are read from, stay until the context cleaner reclaims
+    * them with the returned frame.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 16,
                           verbose: Boolean = false,
@@ -796,6 +794,10 @@ object Dedup {
     val sp = pairs.sparkSession
     val sc = sp.sparkContext
     checkpointDir.foreach(d => if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d))
+    // the RDD each checkpointed table is stored in, until it is
+    // released; the tables the labels read are dropped from it
+    val stored = HashMap.empty[DataFrame, RDD[_]]
+    def release(df: DataFrame): Unit = stored.remove(df).foreach(_.unpersist(blocking = false))
     // STATS SHEDDING: Dataset.checkpoint carries the origin plan's
     // estimated Statistics into the checkpointed LogicalRDD. For an
     // iterated fixpoint sizeInBytes is a BigInt PRODUCT across each
@@ -809,7 +811,9 @@ object Dedup {
       val snap =
         if (checkpointDir.isDefined) df.checkpoint(eager = true)
         else df.localCheckpoint(eager = true)
-      sp.createDataFrame(snap.rdd, snap.schema)
+      val out = sp.createDataFrame(snap.rdd, snap.schema)
+      snap.queryExecution.logical match { case r: LogicalRDD => stored(out) = r.rdd }
+      out
     }
     // the labels keep the pair columns' nullability
     val nullableIds = pairs.schema("a").nullable || pairs.schema("b").nullable
@@ -854,7 +858,9 @@ object Dedup {
           else {
             table = None
             live = df.rdd.map(r => (r.getLong(0), r.getLong(1)))
-            Left(LongMap.from(tt.collect().iterator.map(r => r.getLong(0) -> r.getLong(1))))
+            val tm = LongMap.from(tt.collect().iterator.map(r => r.getLong(0) -> r.getLong(1)))
+            release(tt)
+            Left(tm)
           }
       }
       t match {
@@ -881,7 +887,10 @@ object Dedup {
           held += live
         case Right(tt) =>
           round += 1
-          if (nodes.isEmpty) nodes = Some(tt.select(col("node").as("doc_id")))
+          if (nodes.isEmpty) {
+            nodes = Some(tt.select(col("node").as("doc_id")))
+            stored -= tt
+          }
           var f = tt
           for (_ <- 1 to 6) {
             f = f.join(f.select(col("node").as("n2"), col("tgt").as("t2")),
@@ -889,13 +898,19 @@ object Dedup {
               .select(col("node"), col("t2").as("tgt"))
           }
           f = ckpt(f)
+          stored -= f
           fs += f
-          table = table.map(df => ckpt(df
-            .join(f.select(col("node").as("x"), col("tgt").as("fx")), "x")
-            .join(f.select(col("node").as("y"), col("tgt").as("fy")), "y")
-            .select(col("fx").as("x"), col("fy").as("y"))
-            .filter(col("x") =!= col("y"))
-            .distinct()))
+          release(tt)
+          table = table.map { df =>
+            val next = ckpt(df
+              .join(f.select(col("node").as("x"), col("tgt").as("fx")), "x")
+              .join(f.select(col("node").as("y"), col("tgt").as("fy")), "y")
+              .select(col("fx").as("x"), col("fy").as("y"))
+              .filter(col("x") =!= col("y"))
+              .distinct())
+            release(df)
+            next
+          }
       }
       // observability: per-round wall time and where the round ran —
       // gated off by default (a library must not write to stderr)
@@ -929,9 +944,11 @@ object Dedup {
         m.select(col("doc_id"), col("label").as("component"),
           count(lit(1)).over(Window.partitionBy("label")).as("n_members"))
     }
-    // the labels read neither the edge and quotient RDDs nor the
-    // broadcasts: release them now instead of at the next GC
+    // the labels read neither the edge and quotient RDDs, the last
+    // edge table nor the broadcasts: release them now instead of at
+    // the next GC
     held.foreach(_.unpersist(blocking = false))
+    stored.valuesIterator.foreach(_.unpersist(blocking = false))
     bcs.foreach(_.destroy())
     (out, rounds)
   }

@@ -199,9 +199,6 @@ object Similarity {
       struct((dp / lit(normC)).as("s"), lit(j).as("list"))
     }: _*)
 
-  private def ivfScores(nlist: Int, dims: Int): Column =
-    ivfScoresFor(Array.tabulate(nlist)(centroid(_, dims)))
-
   /** IVF (inverted-file) ANN: every corpus vector is assigned to its
     * best-cosine centroid out of `nlist` deterministic md5-derived
     * centroids — a pure map-side argmax over plan literals (the

@@ -28,8 +28,8 @@ object Channels {
     * TIMESTAMP, whose result shifts with spark.sql.session.timeZone.
     *
     * The loader is PURE: it never mutates session config. The engine's
-    * own entry points (Bench/Verify/Smoke/Plans/Profile and the test
-    * sessions) enable the nanos legacy flag at session build; an
+    * own mains and test sessions enable the nanos legacy flag at
+    * session build (`GraftSession.local`); an
     * external session reading a nanos fixture without it gets Spark's
     * loud legacy-flag error instead of a silently flipped global.
     */

@@ -18,19 +18,7 @@ import graft.datapipe.Dedup
   */
 class ComponentsSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4).newSession()
 
   private def pairs(edges: Seq[(Long, Long)]): DataFrame = {
     val s = spark
@@ -171,11 +159,13 @@ class ComponentsSpec extends AnyFunSuite {
     val p = pairs(path(100))
     Seq(Dedup.CcBroadcastMaxNodes, 99L, 0L).foreach { gate =>
       val before = sc.getPersistentRDDs.keySet
-      val (out, _) = Dedup.components(p, 16, verbose = false, None, gate)
+      val (out, rounds) = Dedup.components(p, 16, verbose = false, None, gate)
       val left = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
       // under the gate nothing stays persisted; above it only the
-      // checkpointed round tables the labels are read from
+      // checkpointed tables the labels are read from: each round's f
+      // and round 1's t
       if (gate == Dedup.CcBroadcastMaxNodes) assert(left.isEmpty, left.values.mkString(", "))
+      if (gate == 0L) assert(left.size <= rounds + 1, s"${left.size} RDDs after $rounds rounds")
       assert(!left.values.exists(r => Option(r.name).exists(_.startsWith("cc "))), s"gate $gate")
       // and the labels are still readable after the release
       assert(out.collect().forall(_.getLong(1) == 0L), s"gate $gate")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,7 @@ import graft.functions.FloatDot.floatDot
 /** Tests for the round-2 additions: FloatDot codegen expression,
   * piecewise detrend, log-log interpolation, WAV sink, streaming ops.
   */
-class ExtrasSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ExtrasSpec extends AnyFunSuite with GraftSpark {
 
   test("FloatDot matches the cast-to-double formulation bit for bit") {
     import spark.implicits._

@@ -4,7 +4,6 @@ import java.io.File
 import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,14 +16,7 @@ import graft.sources.{Ebml, IdeSink, IdeSource, MideSchema}
   * layer's VINT edge cases. Reference surface: `Endaq` /
   * `EndaqChannel` (`io.py:160-301`).
   */
-class IdeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IdeSpec extends AnyFunSuite with GraftSpark {
 
   private val tempDirs = scala.collection.mutable.ArrayBuffer.empty[File]
 

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dsp.{FilterDesign, IIR}
 import graft.ops.ParallelIIR
 
-class ParallelIIRSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ParallelIIRSpec extends AnyFunSuite with GraftSpark {
 
   test("step matrix propagates DF2T state exactly") {
     val (b, a) = FilterDesign.butter(3, 0.25, "lowpass")

@@ -16,19 +16,7 @@ import graft.signal.Signal
   */
 class PerChannelSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-      .newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4).newSession()
 
   /** Three 100 Hz channels of unequal length. */
   private def frame(): DataFrame = {

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,15 +17,7 @@ import graft.streaming.StreamingOps
   * `compressRelabel` pointer-halving bound and the single-batch
   * `require` in the shared-oracle harness `runIncrementalAdmit`.
   */
-class Round11Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round11Spec extends AnyFunSuite with GraftSpark {
 
   // ---- controlled multi-batch file stream ---------------------------------
 

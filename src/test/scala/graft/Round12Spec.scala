@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,14 +12,7 @@ import graft.signal.Signal
   * kernel; the default threshold keeps the one-pass PerChannel
   * lowering for ordinary inputs.
   */
-class Round12Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round12Spec extends AnyFunSuite with GraftSpark {
 
   private def mkDf(n: Int) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,14 +11,7 @@ import graft.datapipe.{Bucketing, Sketches, Skew}
   * and the skew-salted join (result identical to the plain join, hot
   * keys actually spread across partitions).
   */
-class Round13Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round13Spec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

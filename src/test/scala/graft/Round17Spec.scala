@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -25,15 +25,7 @@ import graft.streaming.StreamingOps
   *    (r16 advice): scale·cnt overflowing to Inf used to make every
   *    quantum round(x/Inf) = 0 — a silently-zeroed signal.
   */
-class Round17Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round17Spec extends AnyFunSuite with GraftSpark {
 
   import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,15 +9,7 @@ import graft.signal.{Signal, Spectrum}
   * two-level resample grids, outer-alignment rss, lazy/empty-safe ANN
   * entry points, struct-keyed frequency-parallel SRS.
   */
-class Round3Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round3Spec extends AnyFunSuite with GraftSpark {
 
   test("Signal.interp1d accessor raises on out-of-range grid by default (scipy parity)") {
     import spark.implicits._

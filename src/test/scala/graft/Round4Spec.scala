@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import graft.datapipe.{Dedup, Similarity}
 /** Tests for the round-4 additions: IVF-flat ANN and banded SimHash
   * near-duplicate detection.
   */
-class Round4Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round4Spec extends AnyFunSuite with GraftSpark {
 
   test("ivfTopK: structural contract and agreement with brute force inside probed lists") {
     import spark.implicits._

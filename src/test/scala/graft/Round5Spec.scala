@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import graft.datapipe.{Clustering, Dedup, Packing, Similarity}
 /** Tests for the round-5 additions: two-level sequence packing,
   * k-means-trained IVF centroids, and recall composition.
   */
-class Round5Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round5Spec extends AnyFunSuite with GraftSpark {
 
   private def packFixture = {
     import spark.implicits._

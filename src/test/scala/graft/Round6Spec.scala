@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +10,7 @@ import graft.datapipe.{Bpe, Dedup, Sampling}
   * streaming admission loop, mixture re-weighting, BPE merge
   * training, and the unified null-text semantics.
   */
-class Round6Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round6Spec extends AnyFunSuite with GraftSpark {
 
   private def docsFixture = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,15 +12,7 @@ import graft.signal.Channels
   * the memoized Jaccard-verify gate hint, and the full-matrix smoke
   * sweep that makes a loader break impossible to miss again.
   */
-class Round7Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round7Spec extends AnyFunSuite with GraftSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

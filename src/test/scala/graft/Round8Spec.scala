@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.signal.Channels
@@ -10,15 +9,7 @@ import graft.signal.Channels
   * duplicate-span join-back, chunked quantization-range training, and
   * the int8-scored IVF recall loop.
   */
-class Round8Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round8Spec extends AnyFunSuite with GraftSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.datapipe.Dedup
@@ -11,15 +11,7 @@ import graft.datapipe.Dedup
   * the Long-typed Bloom sizing, the 128-bit-safe perceptual-hash
   * compare, and the file-set micro-batch offset.
   */
-class Round9Spec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class Round9Spec extends AnyFunSuite with GraftSpark {
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,15 +12,7 @@ import graft.datapipe.{Dedup, Similarity}
   * channels (FIXTURES.md family B) plus smoke checks on the driver
   * fixtures.
   */
-class SparkOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SparkOpsSpec extends AnyFunSuite with GraftSpark {
 
   private def sine(name: String, a: Double, f0: Double, fs: Double, n: Int): DataFrame = {
     import spark.implicits._

@@ -6,7 +6,7 @@ import graft.dsp.CubicSpline
 /** Not-a-knot cubic spline: the defining property is exact
   * reproduction of any cubic polynomial (which natural splines fail).
   */
-class SplineSpec extends AnyFunSuite {
+class SplineSpec extends AnyFunSuite with GraftSpark {
 
   test("reproduces a cubic polynomial exactly (the not-a-knot property)") {
     def p(x: Double) = 2.0 * x * x * x - 3.0 * x * x + 0.5 * x - 7.0
@@ -58,10 +58,6 @@ class SplineSpec extends AnyFunSuite {
   }
 
   test("distributed cubic resample matches the array-level spline") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.shuffle.partitions", "4").getOrCreate()
     import spark.implicits._
     val xs = Array.tabulate(50)(i => i * 0.9)
     val rng = new scala.util.Random(11)

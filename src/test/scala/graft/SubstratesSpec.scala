@@ -13,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `releaseHeavy` frees the corpus-sized entries except those named in
   * SPARK_GRAFT_KEEP.
   */
-class SubstratesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SubstratesSpec extends AnyFunSuite with BeforeAndAfterAll with GraftSpark {
 
   /** A private copy of the sf0.001 events and documents tables: plans
     * over it share no cache entry with other suites' substrates, so
@@ -35,14 +27,10 @@ class SubstratesSpec extends AnyFunSuite with BeforeAndAfterAll {
     d.toString
   }
 
-  /** A fresh session on the shared context: no substrate memoized yet. */
-  private def session(): SparkSession = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s
-  }
+  /** A fresh session on the shared context, with the settings the
+    * context was built with: no substrate memoized yet.
+    */
+  private def session(): SparkSession = spark.newSession()
 
   private def persistedRdds(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
   private def ideWriteDirs(): Set[String] =

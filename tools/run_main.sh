@@ -8,8 +8,9 @@
 #    JVM of interest even starts, which multiplied across the ladder
 #    legs is minutes of pure overhead.
 # Mirrors build.sbt exactly: same --add-opens set (Spark 4.x on
-# JDK 17 outside spark-submit), same -D flags, same SPARK_DRIVER_MEM
-# heap contract. Requires a prior `sbt compile`.
+# JDK 17 outside spark-submit), same SPARK_DRIVER_MEM heap contract
+# (default: half of MemTotal, clamped to 2-8g). Session settings live
+# in graft.GraftSession. Requires a prior `sbt compile`.
 #
 # Usage: tools/run_main.sh <mainClass> [args...]   (env: SPARK_DRIVER_MEM, SPARK_GRAFT_*)
 set -euo pipefail
@@ -22,7 +23,10 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
+# build.sbt's defaultHeap: MemTotal/2 in whole GB, clamped to 2-8g
+# (2g where /proc/meminfo is absent)
+HEAP_GB=$(awk '/^MemTotal:/ { g = int($2 / 2097152) } END { print (g < 2 ? 2 : g > 8 ? 8 : g) }' \
+  /proc/meminfo 2>/dev/null || echo 2)
 exec java $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-24g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-${HEAP_GB}g}" \
   -cp "$CLASSES:/opt/spark/jars/*" "$@"
