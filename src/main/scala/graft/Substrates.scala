@@ -8,6 +8,9 @@ import org.apache.spark.sql.functions._
 
 import graft.datapipe.{Bpe, Clustering, Dedup, Multimodal, Ranking, Similarity, TextAnalysis}
 import graft.ops.{Interp, Psd}
+import graft.queries.DedupQueries.ccVerbose
+import graft.queries.SimilarityQueries.{PQ_ITERS, PQ_K, PQ_M}
+import graft.queries.TextQueries.{BPE_ROUNDS, piiInjected}
 import graft.signal.Channels
 
 /** The shared per-(session, dir) inputs of the query registry: the
@@ -364,20 +367,19 @@ object Substrates {
     Similarity.dimRanges(emb(s, dir), dims = 64))
 
   /** Trained PQ codebooks (m sub-spaces x k centroids over the 64-dim
-    * embeddings, SparkEntry.PQ_ITERS Lloyd iterations per
+    * embeddings, SimilarityQueries.PQ_ITERS Lloyd iterations per
     * sub-quantizer) — train once, encode/search many; k*dims doubles
     * on the driver, same payload as one flat k-means.
     */
   val pqBooks = driverSide("pq")((s, dir) =>
-    Similarity.pqCodebooks(emb(s, dir), m = SparkEntry.PQ_M, k = SparkEntry.PQ_K,
-      iters = SparkEntry.PQ_ITERS, dims = 64))
+    Similarity.pqCodebooks(emb(s, dir), m = PQ_M, k = PQ_K, iters = PQ_ITERS, dims = 64))
 
   /** RESIDUAL PQ codebooks (FAISS IndexIVFPQ): same m/k/iters budget,
     * but trained on x − c(list) against the TRAINED coarse quantizer.
     */
   val rpqBooks = driverSide("rpq")((s, dir) =>
     Similarity.residualPqCodebooks(emb(s, dir), trainedCents(s, dir),
-      m = SparkEntry.PQ_M, k = SparkEntry.PQ_K, iters = SparkEntry.PQ_ITERS, dims = 64))
+      m = PQ_M, k = PQ_K, iters = PQ_ITERS, dims = 64))
 
   /** OPQ rotation + codebooks over the residual table (FAISS
     * OPQMatrix-before-IndexIVFPQ): same m/k/iters budget as the
@@ -386,7 +388,7 @@ object Substrates {
     */
   val opqFit = driverSide("opq")((s, dir) =>
     Similarity.opqResidualTrain(emb(s, dir), trainedCents(s, dir),
-      m = SparkEntry.PQ_M, k = SparkEntry.PQ_K, iters = SparkEntry.PQ_ITERS, dims = 64,
+      m = PQ_M, k = PQ_K, iters = PQ_ITERS, dims = 64,
       alternations = 3))
 
   /** The trained BPE merge list: the encode and token-count queries
@@ -394,7 +396,7 @@ object Substrates {
     * (one driver top-1 per round).
     */
   val bpeMergeList = driverSide("bpemerges")((s, dir) =>
-    Bpe.merges(docTermCounts(s, dir), rounds = SparkEntry.BPE_ROUNDS)
+    Bpe.merges(docTermCounts(s, dir), rounds = BPE_ROUNDS)
       .orderBy("round").collect().map(r => (r.getString(1), r.getString(2))).toSeq)
 
   /** The PII-scrubbed corpus (benchmark holdout removed, synthetic
@@ -406,7 +408,7 @@ object Substrates {
     */
   val redactedCorpus = cached("redacted", heavy = true)((s, dir) =>
     TextAnalysis.redactPii(
-        SparkEntry.piiInjected(docs(s, dir).filter(col("doc_id") % 97 =!= 0)),
+        piiInjected(docs(s, dir).filter(col("doc_id") % 97 =!= 0)),
         keep = Seq("lang"))
       .select(col("doc_id"), col("lang"),
         (col("n_email") + col("n_ip") + col("n_num")).cast("long").as("n_pii"),
@@ -420,7 +422,7 @@ object Substrates {
     */
   val dedupComponents = cached("components", heavy = true)((s, dir) =>
     Dedup.connectedComponents(lshCands(s, dir), maxIters = SparkEntry.CC_ORACLE_ROUNDS,
-      verbose = SparkEntry.ccVerbose).cache())
+      verbose = ccVerbose).cache())
 
   /** Trained IVF quantizer (k=16, 2 Lloyd iterations over the
     * embedding table): the trained search, the occupancy diagnostic,

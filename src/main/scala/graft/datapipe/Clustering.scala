@@ -68,7 +68,7 @@ object Clustering {
         // per-(cluster, dim) means; n*dims rows but fully partial-agg'd.
         // +1e-7 before round: means of discrete-valued embeddings can
         // land exactly on round-6 midpoints where engines tie-break
-        // differently (see the parity notes in SparkEntry)
+        // differently (see the parity notes in SimilarityQueries)
         val means = assigned
           .select(col("cluster"), posexplode(col("embedding")).as(Seq("dim", "x")))
           .groupBy("cluster", "dim")

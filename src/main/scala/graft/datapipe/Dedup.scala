@@ -924,7 +924,11 @@ object Dedup {
         val m = labels.getOrElse(LongMap.empty[Long])
         val size = LongMap.empty[Long]
         m.foreachValue(l => size(l) = size.getOrElse(l, 0L) + 1L)
-        val rows = m.iterator.map { case (d, l) => Row(d, l, size(l)) }.toVector
+        // rows in doc_id order: a LongMap iterates in slot order, which
+        // follows the order driverHops' tasks returned
+        val ids = m.keysIterator.toArray
+        java.util.Arrays.sort(ids)
+        val rows = ids.iterator.map { d => val l = m(d); Row(d, l, size(l)) }.toVector
         sp.createDataFrame(sc.parallelize(rows, sc.defaultParallelism),
           StructType(idPairSchema("doc_id", "component", nullableIds).fields :+
             StructField("n_members", LongType, nullable = false)))

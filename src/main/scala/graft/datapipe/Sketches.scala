@@ -32,7 +32,7 @@ object Sketches {
     * into log2(m) register-index bits and 52−log2(m) rank bits, so
     * rho ∈ [1, R] with R = (52 − log2 m) + 1 = 53 − log2 m. Shared by
     * the register builder, the estimator's integer harmonic sum, and
-    * the SQL oracle (SparkEntry.hllSql) — the three MUST agree or the
+    * the SQL oracle (TextQueries.hllSql) — the three MUST agree or the
     * raw-regime estimate deflates by 2^(off-by) (r13 advice: the
     * hardcoded 45 was only correct for m=256).
     */

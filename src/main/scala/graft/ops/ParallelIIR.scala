@@ -86,10 +86,8 @@ object ParallelIIR {
     * the per-channel affine combine is itself a (tiny) distributed
     * stage (a few doubles per chunk, grouped by channel), and pass 2
     * joins chunks with their true initial states via cogroup instead
-    * of a driver collect + broadcast. That is what lets
-    * [[graft.plans.GraftRules.LowerIirFilters]] lower an IirFilter
-    * node to this path inside the OPTIMIZER without executing jobs at
-    * planning time.
+    * of a driver collect + broadcast, so building the frame runs no
+    * job.
     */
   def lfilterDistributed(df: DataFrame, b: Array[Double], a: Array[Double],
                          chunk: Int = 1 << 20, ziFromFirst: Boolean = false): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -69,45 +69,27 @@ object GraftRules {
     }
   }
 
-  /** Expand surviving IirFilter nodes into a physical kernel. Runs
-    * AFTER FuseIirFilters in the same rule batch, so a fused cascade
-    * lowers exactly once. The replacement subtree's output attributes
-    * are re-aliased to the node's original exprIds so parent operators
-    * stay resolved.
+  /** Expand surviving IirFilter nodes into the PerChannel
+    * secondary-sort kernel: one shuffle, one sequential pass per
+    * channel, so a channel must fit in one task, as for every other
+    * PerChannel kernel. Runs AFTER FuseIirFilters in the same rule
+    * batch, so a fused cascade lowers exactly once. The replacement
+    * subtree's output attributes are re-aliased to the node's original
+    * exprIds so parent operators stay resolved.
     *
-    * TWO lowerings, picked by the child's plan-stats size estimate:
-    *  - small inputs → the PerChannel secondary-sort kernel (one
-    *    shuffle, one sequential pass per channel; a channel must fit
-    *    in one task);
-    *  - inputs at/above `spark.graft.iir.parallelMinBytes` (default
-    *    2 GiB) → the chunk-parallel linear-recurrence scan
-    *    ([[graft.ops.ParallelIIR.lfilterDistributed]],
-    *    `spark.graft.iir.chunkRows` rows per task, default 2^20) —
-    *    one giant channel is no longer a single-task ceiling. The
-    *    parallel scan is fully lazy, so lowering stays a pure plan
-    *    rewrite. Values match the sequential kernel to the roundoff
-    *    of the per-chunk state handoff (~1e-12 relative — far inside
-    *    the oracle's 1e-6 rounding), and exactly when a channel fits
-    *    in one chunk.
+    * There is no second lowering for channels above one task: no
+    * workload comes near that size. A caller that wants the
+    * chunk-parallel scan within a channel asks for
+    * [[graft.ops.ParallelIIR.lfilterDistributed]] directly.
     */
   object LowerIirFilters extends Rule[LogicalPlan] {
-    val MIN_BYTES_KEY = "spark.graft.iir.parallelMinBytes"
-    val CHUNK_ROWS_KEY = "spark.graft.iir.chunkRows"
-
     override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
       case f @ IirFilter(b, a, child) =>
-        val spark = SparkSession.active
         val (bArr, aArr) = (b.toArray, a.toArray)
-        val childDf = GraftSqlBridge.dataFrame(spark, child)
-        val minBytes = spark.conf.get(MIN_BYTES_KEY, (2L << 30).toString).toLong
-        val chunkRows = spark.conf.get(CHUNK_ROWS_KEY, (1 << 20).toString).toInt
-        val lowered =
-          if (child.stats.sizeInBytes >= minBytes)
-            graft.ops.ParallelIIR.lfilterDistributed(childDf, bArr, aArr, chunkRows)
-          else
-            graft.ops.PerChannel.transformSamples(childDf) {
-              (_, ts, vs) => (ts, graft.dsp.IIR.lfilter(bArr, aArr, vs))
-            }
+        val childDf = GraftSqlBridge.dataFrame(SparkSession.active, child)
+        val lowered = graft.ops.PerChannel.transformSamples(childDf) {
+          (_, ts, vs) => (ts, graft.dsp.IIR.lfilter(bArr, aArr, vs))
+        }
         val newPlan = GraftSqlBridge.logicalPlan(lowered)
         Project(f.output.zip(newPlan.output).map { case (orig, n) =>
           Alias(n, orig.name)(exprId = orig.exprId)

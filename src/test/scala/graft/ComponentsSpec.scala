@@ -118,6 +118,14 @@ class ComponentsSpec extends AnyFunSuite {
     }
   }
 
+  test("under the gate the labels come back in doc_id order") {
+    for ((name, edges, maxIters) <- graphs) {
+      val (out, _) = Dedup.connectedComponentsCounted(pairs(edges), maxIters)
+      val ids = out.collect().map(_.getLong(0)).toSeq
+      assert(ids === ids.sorted, name)
+    }
+  }
+
   test("nullable pair columns give nullable labels at every node gate") {
     val p = spark.createDataFrame(pairs(path(30)).rdd,
       StructType(Seq("a", "b").map(StructField(_, LongType, nullable = true))))

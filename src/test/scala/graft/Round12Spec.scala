@@ -6,11 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.GraftRules
 import graft.signal.Signal
 
-/** Round-12 pins: `LowerIirFilters` routes large inputs through the
-  * chunk-parallel linear-recurrence scan (one giant channel is no
-  * longer a single-task ceiling), values matching the sequential
-  * kernel; the default threshold keeps the one-pass PerChannel
-  * lowering for ordinary inputs.
+/** Round-12 pins: `LowerIirFilters` lowers an `IirFilter` to one
+  * PerChannel kernel pass, a fused cascade included, with the values
+  * of the direct sequential filter.
   */
 class Round12Spec extends AnyFunSuite with GraftSpark {
 
@@ -21,42 +19,20 @@ class Round12Spec extends AnyFunSuite with GraftSpark {
       .toDF("channel", "t", "v")
   }
 
-  test("IirFilter lowers to the chunk-parallel scan above the size threshold") {
+  test("IirFilter lowers to one PerChannel kernel with the direct lfilter's values") {
     val (b, a) = graft.dsp.FilterDesign.butter(4, 0.2, "lowpass")
     val df = mkDf(5000)
-    // baseline: the default threshold (2 GiB) keeps the PerChannel
-    // lowering — exactly one MapPartitions kernel, no CoGroup
-    val small = Signal(df).lfilter(b, a).df
-    val smallOpt = small.queryExecution.optimizedPlan
-    assert(smallOpt.collect {
+    // exactly one MapPartitions kernel, no CoGroup, no IirFilter left
+    val filtered = Signal(df).lfilter(b, a).df
+    val opt = filtered.queryExecution.optimizedPlan
+    assert(opt.collect { case f: graft.plans.IirFilter => f }.isEmpty)
+    assert(opt.collect {
       case c: org.apache.spark.sql.catalyst.plans.logical.CoGroup => c }.isEmpty)
-    assert(smallOpt.collect {
+    assert(opt.collect {
       case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m }.size === 1)
-    val seqV = small.orderBy("t").collect().map(_.getDouble(2))
-
-    spark.conf.set(GraftRules.LowerIirFilters.MIN_BYTES_KEY, "0")
-    spark.conf.set(GraftRules.LowerIirFilters.CHUNK_ROWS_KEY, "512")
-    try {
-      val par = Signal(df).lfilter(b, a).df
-      val opt = par.queryExecution.optimizedPlan
-      // plan-asserted: the chunked lowering is a CoGroup (pass-2 join
-      // of chunks with their true initial states), no IirFilter left,
-      // and no sequential single-pass kernel
-      assert(opt.collect { case f: graft.plans.IirFilter => f }.isEmpty)
-      assert(opt.collect {
-        case c: org.apache.spark.sql.catalyst.plans.logical.CoGroup => c }.nonEmpty,
-        s"expected the chunk-parallel CoGroup lowering, got:\n$opt")
-      val parV = par.orderBy("t").collect().map(_.getDouble(2))
-      assert(parV.length === seqV.length)
-      // 5000 rows / 512-row chunks = 10 state handoffs; the affine
-      // state propagation matches sequential to fp roundoff — far
-      // inside the oracle's 1e-6 rounding ("hash-identical")
-      parV.zip(seqV).foreach { case (x, y) =>
-        assert(math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(y)), s"$x vs $y") }
-    } finally {
-      spark.conf.unset(GraftRules.LowerIirFilters.MIN_BYTES_KEY)
-      spark.conf.unset(GraftRules.LowerIirFilters.CHUNK_ROWS_KEY)
-    }
+    val got = filtered.orderBy("t").collect().map(_.getDouble(2))
+    val direct = graft.dsp.IIR.lfilter(b, a, df.orderBy("t").collect().map(_.getDouble(2)))
+    assert(got.toSeq === direct.toSeq)
   }
 
   test("AVI raw-DIB roundtrip: decoded frames equal the pattern exactly; shifted pair hashes equal") {
@@ -209,25 +185,21 @@ class Round12Spec extends AnyFunSuite with GraftSpark {
     assert(agree >= 6, s"rerank recovered only $agree/8 exact top-1s")
   }
 
-  test("chunk-parallel lowering preserves cascade fusion (one CoGroup for two filters)") {
+  test("IirFilter cascade fuses before lowering (one MapPartitions for two filters)") {
     val (b1, a1) = graft.dsp.FilterDesign.butter(2, 0.25, "lowpass")
     val (b2, a2) = graft.dsp.FilterDesign.butter(2, 0.5, "lowpass")
     val df = mkDf(2048)
-    spark.conf.set(GraftRules.LowerIirFilters.MIN_BYTES_KEY, "0")
-    try {
-      val chained = Signal(df).lfilter(b1, a1).lfilter(b2, a2).df
-      val opt = chained.queryExecution.optimizedPlan
-      // FuseIirFilters still collapses the cascade before lowering:
-      // exactly one parallel scan (CoGroup), not two
-      assert(opt.collect {
-        case c: org.apache.spark.sql.catalyst.plans.logical.CoGroup => c }.size === 1)
-      val bf = GraftRules.convolve(b1.toSeq, b2.toSeq).toArray
-      val af = GraftRules.convolve(a1.toSeq, a2.toSeq).toArray
-      val direct = graft.dsp.IIR.lfilter(bf, af,
-        df.orderBy("t").collect().map(_.getDouble(2)))
-      val got = chained.orderBy("t").collect().map(_.getDouble(2))
-      got.zip(direct).foreach { case (x, y) =>
-        assert(math.abs(x - y) <= 1e-9 * math.max(1.0, math.abs(y))) }
-    } finally spark.conf.unset(GraftRules.LowerIirFilters.MIN_BYTES_KEY)
+    val chained = Signal(df).lfilter(b1, a1).lfilter(b2, a2).df
+    val opt = chained.queryExecution.optimizedPlan
+    // FuseIirFilters collapses the cascade before lowering: exactly
+    // one kernel pass, not two
+    assert(opt.collect {
+      case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m }.size === 1)
+    val bf = GraftRules.convolve(b1.toSeq, b2.toSeq).toArray
+    val af = GraftRules.convolve(a1.toSeq, a2.toSeq).toArray
+    val direct = graft.dsp.IIR.lfilter(bf, af,
+      df.orderBy("t").collect().map(_.getDouble(2)))
+    val got = chained.orderBy("t").collect().map(_.getDouble(2))
+    assert(got.toSeq === direct.toSeq)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.datapipe.{Bpe, Dedup}
+import graft.queries.DedupQueries
 import graft.signal.Channels
 
 /** Tests for the round-7 fixes: the TIMESTAMP_NTZ events loader (the
@@ -66,7 +67,7 @@ class Round7Spec extends AnyFunSuite with GraftSpark {
     // convergence (a changed==0 round before the bound) is the gate.
     // The counted hook ties the round count to THIS run, not to
     // whichever CC run a sibling suite executed last.
-    val (labels, rounds) = SparkEntry.ccConvergence(spark, sf)
+    val (labels, rounds) = DedupQueries.ccConvergence(spark, sf)
     assert(labels.count() > 0)
     assert(rounds < SparkEntry.CC_ORACLE_ROUNDS,
       s"CC hit the iteration cap un-converged: $rounds rounds")
@@ -216,7 +217,7 @@ class Round7Spec extends AnyFunSuite with GraftSpark {
     // the iteration cap (round 6 shipped a green-but-under-merged
     // sf0.1 table exactly this way); assert on a counted fresh run
     // over the same sf0.1 candidate graph, not the shared global
-    val (_, rounds) = SparkEntry.ccConvergence(spark, dir)
+    val (_, rounds) = DedupQueries.ccConvergence(spark, dir)
     assert(rounds < SparkEntry.CC_ORACLE_ROUNDS,
       s"sf0.1 CC hit the cap un-converged: $rounds rounds")
     assert(admit == keep)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.queries.SimilarityQueries.{PQ_ITERS, PQ_K, PQ_M}
 import graft.signal.Channels
 
 /** Tests for the round-8 fixes: pure loaders whose NTZ decoding is
@@ -186,16 +187,16 @@ class Round8Spec extends AnyFunSuite with GraftSpark {
   test("product quantization: codes are bounded, ADC recall is usable, ragged input fails") {
     import graft.datapipe.Similarity
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
-    val books = Similarity.pqCodebooks(e, m = SparkEntry.PQ_M, k = SparkEntry.PQ_K,
-      iters = SparkEntry.PQ_ITERS, dims = 64)
-    assert(books.length === SparkEntry.PQ_M)
-    assert(books.forall(_.length === SparkEntry.PQ_K))
-    assert(books.forall(_.forall(_.length === 64 / SparkEntry.PQ_M)))
+    val books = Similarity.pqCodebooks(e, m = PQ_M, k = PQ_K,
+      iters = PQ_ITERS, dims = 64)
+    assert(books.length === PQ_M)
+    assert(books.forall(_.length === PQ_K))
+    assert(books.forall(_.forall(_.length === 64 / PQ_M)))
     val codes = Similarity.pqEncode(e, books).cache()
     // every code addresses a real centroid
-    (0 until SparkEntry.PQ_M).foreach { u =>
+    (0 until PQ_M).foreach { u =>
       val mm = codes.agg(min(s"c$u"), max(s"c$u")).collect()(0)
-      assert(mm.getInt(0) >= 0 && mm.getInt(1) < SparkEntry.PQ_K, s"subspace $u: $mm")
+      assert(mm.getInt(0) >= 0 && mm.getInt(1) < PQ_K, s"subspace $u: $mm")
     }
     // ADC search never touches the float corpus; recall vs the exact
     // truth must clear a usable floor (deterministic fit, so this is
