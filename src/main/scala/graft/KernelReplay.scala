@@ -15,14 +15,15 @@ import java.nio.file.{Files, Paths}
   * .interpolate`, `Rainflow.countCycles`) in ONE sequential pass —
   * no Spark, no chunking, no state handoff. The engine side runs the
   * full distributed path (streaming state composition for the IIR,
-  * chunked cogroup for the spline, flatMapGroups for rainflow), so
-  * what this gate proves is exactly what the r14 campaign showed
-  * sf0.01 cannot: that the DISTRIBUTED composition (micro-batch state
-  * handoff, chunk boundaries, partition order) reproduces the
+  * one whole-channel gather for the spline, flatMapGroups for
+  * rainflow), so what this gate proves is exactly what the r14
+  * campaign showed sf0.01 cannot: that the DISTRIBUTED composition
+  * (micro-batch state handoff, chunk boundaries, partition order)
+  * reproduces the
   * sequential ground truth at full series length. Comparison is the
   * same strictness the DuckDB gate uses per query: bit-exact for the
   * IIR and rainflow rows, the query's own %.4e projection for the
-  * chunked spline.
+  * spline.
   *
   * A sixth replay, `q_pq_recall_replay` (opt-in via the names arg),
   * serves the OTHER oracle-infeasibility shape (r17 verdict #3): the

@@ -113,20 +113,15 @@ object OracleDsp {
        |WHERE b.rn >= $p AND b.rn <= st.n + $p - 1""".stripMargin
   }
 
-  /** One-directional lfilter over the uniform grid (zero initial
-    * state, or scipy lfilter_zi scaled by the first sample when
-    * `ziFromFirst` — the `ParallelIIR.lfilterDistributed` contract).
-    * Output (channel, t, v); `vExpr` projects the filtered value
-    * (e.g. a printf for the parallel variants whose state handoff is
-    * not bit-identical to the sequential recurrence).
+  /** One-directional lfilter over the uniform grid from zero initial
+    * state (the `ParallelIIR.lfilterDistributed` contract). Output
+    * (channel, t, v); `vExpr` projects the filtered value (e.g. a
+    * printf for the parallel variants whose state handoff is not
+    * bit-identical to the sequential recurrence).
     */
   def lfilterUniformSql(uniformCtes: String, b: Array[Double], a: Array[Double],
-                        ziFromFirst: Boolean = false,
                         vExpr: String = "f.y"): String = {
-    val m = math.max(a.length, b.length) - 1
-    val seed =
-      if (ziFromFirst) IIR.lfilterZi(b, a).toSeq.map(z => s"${dlit(z)} * x0")
-      else Seq.fill(m)("0")
+    val seed = Seq.fill(math.max(a.length, b.length) - 1)("0")
     s"""WITH RECURSIVE ${uidxSql(uniformCtes)},
        |st AS MATERIALIZED (SELECT channel, arg_min(v, rn) AS x0 FROM uidx GROUP BY channel),
        |ser AS MATERIALIZED (SELECT channel, rn, v AS x FROM uidx),
@@ -192,8 +187,8 @@ object OracleDsp {
     * functions, the Thomas solve as TWO recursions (forward
     * elimination, back substitution), then the Hermite evaluation at
     * the np.arange grid — every expression mirrors the Scala kernel's
-    * association, so values agree to fp-roundoff of the chunked
-    * cogroup (compared at %.4e; single-chunk channels are bit-exact).
+    * association (`Interp.resample` solves each channel's whole spline
+    * in one `PerChannel` gather); compared at %.4e.
     * `srcCte` must produce `src(channel, t, v)`; assumes >= 4 knots
     * per channel (the n=2/3 kernel special cases are not replayed).
     */

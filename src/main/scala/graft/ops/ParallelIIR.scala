@@ -1,39 +1,38 @@
 package graft.ops
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.col
+import scala.collection.mutable
 import graft.dsp.IIR
+import graft.ops.PerChannel.Sample
 
-/** Distributed IIR filtering for channels too large for one task —
-  * the parallel linear-recurrence scan (SURVEY §2.9 "v2 path",
-  * classic Blelloch-style formulation).
+/** Distributed IIR filtering within a channel — the parallel linear-
+  * recurrence scan (SURVEY §2.9 "v2 path", Blelloch-style).
   *
   * An IIR filter's state after a chunk is affine in its initial
   * state: z_out = A^L z_in + d(chunk), where A is the one-step
   * homogeneous state-transition matrix of the direct-form-II-
   * transposed recurrence (depends only on the a-coefficients) and
   * d(chunk) is the final state when filtering the chunk from zero
-  * state. So:
-  *
-  *   pass 1 (parallel): per chunk, filter from zero state, keep only
-  *     the final state d_i and length L_i;
-  *   combine (driver):  z_{i+1} = A^{L_i} z_i + d_i — a few doubles
-  *     per chunk, sequential but trivial (tree-combinable if ever
-  *     needed);
+  * state. So, over one chunking per call:
+  *   pass 1 (parallel): per chunk, filter from zero state; collect
+  *     d_i, the first sample and the length L_i — m+2 numbers per
+  *     chunk for a filter of order m;
+  *   combine (driver):  z_{i+1} = A^{L_i} z_i + d_i per channel;
   *   pass 2 (parallel): re-filter each chunk with its true initial
-  *     state — outputs are the exact sequential recurrence per chunk.
+  *     state, read from the task closure — outputs are the exact
+  *     sequential recurrence per chunk.
   *
-  * Cost: 2x the filter FLOPs, fully parallel across chunks of the
-  * SAME channel. Matches sequential lfilter to fp-roundoff of the
-  * state handoff (~1e-12 relative).
+  * Cost: 2x the filter FLOPs, parallel across chunks of the SAME
+  * channel. Matches sequential lfilter to fp-roundoff of the state
+  * handoff (~1e-12 relative).
   */
 object ParallelIIR {
 
-  case class ChunkRow(channel: String, chunkId: Long, t: Double, v: Double)
-  case class ChunkState(channel: String, chunkId: Long, state: Array[Double], len: Long)
-  case class InitState(channel: String, chunkId: Long, zi: Array[Double])
-  case class OutRow(channel: String, t: Double, v: Double)
+  /** The `i`-th `chunk`-row slice of a channel's (t, v)-sorted samples. */
+  private case class Chunk(channel: String, i: Int, t: Array[Double], v: Array[Double])
 
   /** One-step homogeneous DF2T state matrix for normalized a
     * (a(0)=1, length n): with input 0, y = z_0 and
@@ -78,98 +77,98 @@ object ParallelIIR {
       s
     }
 
-  /** Distributed lfilter over (channel, t, v) with `chunk` rows per
-    * task. Exact same operator contract as Kernels-level lfilter but
-    * parallel WITHIN a channel.
-    *
-    * FULLY LAZY — no job runs until the returned frame is consumed:
-    * the per-channel affine combine is itself a (tiny) distributed
-    * stage (a few doubles per chunk, grouped by channel), and pass 2
-    * joins chunks with their true initial states via cogroup instead
-    * of a driver collect + broadcast, so building the frame runs no
-    * job.
+  /** The chunking: each channel sorted by (t, v) in one task (the
+    * tie-break chunks duplicate timestamps the same way in every pass),
+    * cut into `chunk`-row chunks and spread over the tasks. Every pass
+    * reads this RDD, so Spark runs its shuffles once; nothing is persisted.
     */
-  def lfilterDistributed(df: DataFrame, b: Array[Double], a: Array[Double],
-                         chunk: Int = 1 << 20, ziFromFirst: Boolean = false): DataFrame = {
+  private def chunked(df: DataFrame, chunk: Int): RDD[Chunk] = {
+    require(chunk > 0)
     val spark = df.sparkSession
     import spark.implicits._
-    require(chunk > 0)
-    val aNorm = a.map(_ / a(0))
-    // (t, v) tie-break: duplicate timestamps must chunk identically in
-    // the pass-1 states and the pass-2 recomputation (row_number over
-    // t alone is nondeterministic under ties)
-    val w = Window.partitionBy("channel").orderBy("t", "v")
-    val chunked = df
-      .withColumn("chunkId", ((row_number().over(w) - 1) / chunk).cast("long"))
-      .selectExpr("channel", "chunkId", "cast(t as double) t", "cast(v as double) v")
-      .as[ChunkRow]
-
-    def sortedVals(rows: Iterator[ChunkRow]): (Array[ChunkRow], Array[Double]) = {
-      val arr = rows.toArray.sortBy(r => (r.t, r.v))
-      (arr, arr.map(_.v))
-    }
-
-    // pass 1: zero-state final states per chunk (+ each chunk's first
-    // sample appended, so the steady-state zi option can seed chunk 0)
-    val states = chunked.groupByKey(r => (r.channel, r.chunkId))
-      .mapGroups { (key, rows) =>
-        val (_, vs) = sortedVals(rows)
-        val (_, st) = IIR.lfilterWithState(b, a, vs, null)
-        ChunkState(key._1, key._2, st :+ (if (vs.isEmpty) 0.0 else vs(0)), vs.length.toLong)
-      }
-
-    val ziUnit = if (ziFromFirst) IIR.lfilterZi(b, a) else null
-    val stateDim = math.max(aNorm.length - 1, 0)
-
-    // distributed combine: z_{i+1} = A^{L_i} z_i + d_i, sequential per
-    // CHANNEL but over chunk-level summaries only — a few doubles per
-    // chunk, so one task per channel handles millions of chunks. d is
-    // the zero-init chunk response; the recurrence is affine, so a
-    // nonzero channel-initial state adds exactly its homogeneous
-    // propagation.
-    val inits = states.groupByKey(_.channel)
-      .flatMapGroups { (ch, it) =>
-        val sorted = it.toArray.sortBy(_.chunkId)
-        val m = stepMatrix(aNorm)
-        val powCache = scala.collection.mutable.Map.empty[Long, Array[Array[Double]]]
-        var z =
-          if (ziFromFirst) ziUnit.map(_ * sorted.head.state.last)
-          else new Array[Double](stateDim)
-        sorted.iterator.map { c =>
-          val zi = z
-          val aL = powCache.getOrElseUpdate(c.len, matPow(m, c.len))
-          val propagated = matVec(aL, zi)
-          z = Array.tabulate(zi.length)(i => propagated(i) + c.state(i))
-          InitState(ch, c.chunkId, zi)
+    df.selectExpr("channel", "cast(t as double) t", "cast(v as double) v").as[Sample]
+      .repartition(col("channel")).sortWithinPartitions("channel", "t", "v")
+      .rdd.mapPartitions { rows =>
+        val it = rows.buffered
+        var (prev, i) = (null: String, -1)
+        Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+          val ch = it.head.channel
+          i = if (i >= 0 && ch == prev) i + 1 else 0
+          prev = ch
+          val run = mutable.ArrayBuffer.empty[Sample]
+          while (run.size < chunk && it.hasNext && it.head.channel == ch) run += it.next()
+          Chunk(ch, i, run.map(_.t).toArray, run.map(_.v).toArray)
         }
       }
-
-    // pass 2: exact outputs with the true initial state per chunk —
-    // cogroup on (channel, chunkId), the init side is one tiny row
-    chunked.groupByKey(r => (r.channel, r.chunkId))
-      .cogroup(inits.groupByKey(s => (s.channel, s.chunkId))) { (key, rows, zis) =>
-        val (arr, vs) = sortedVals(rows)
-        if (arr.isEmpty) Iterator.empty
-        else {
-          val zi = zis.toSeq.headOption.map(_.zi).orNull
-          val (y, _) = IIR.lfilterWithState(b, a, vs, zi)
-          Iterator.tabulate(arr.length)(i => OutRow(key._1, arr(i).t, y(i)))
-        }
-      }.toDF("channel", "t", "v")
+      .keyBy(c => (c.channel, c.i))
+      .partitionBy(new HashPartitioner(spark.sparkContext.defaultParallelism))
+      .values
   }
 
-  /** Chunk-parallel zero-phase filtering: forward pass with
-    * steady-state initial conditions, then the backward pass over the
-    * time-reversed axis — scipy.signal.filtfilt(..., padtype=None)
-    * semantics, with BOTH directions running the parallel scan. (The
-    * padded variant stays in the per-channel kernel, `IIR.filtfilt`.)
+  /** Pass 1 and the driver combine for filtering each chunk's `x(c)`
+    * in scan order (last chunk first when `reversed`): every chunk's
+    * initial state. Pass 1 collects (channel, i, d, first sample, L).
+    * z_0 is zero, or `zi` scaled by the channel's first sample in scan
+    * order (the steady state of a step).
+    */
+  private def initialStates(chunks: RDD[Chunk], b: Array[Double], a: Array[Double],
+                            reversed: Boolean, zi: Array[Double])(
+      x: Chunk => Array[Double]): Map[(String, Int), Array[Double]] = {
+    val summaries = chunks.map { c =>
+      val xs = x(c)
+      (c.channel, c.i, IIR.lfilterWithState(b, a, xs, null)._2, xs(0), xs.length.toLong)
+    }.collect()
+    val step = stepMatrix(IIR.normalized(b, a)._2)
+    val powers = mutable.Map.empty[Long, Array[Array[Double]]]
+    summaries.groupBy(_._1).values.flatMap { cs =>
+      val order = cs.sortBy(s => if (reversed) -s._2 else s._2)
+      var z = if (zi == null) new Array[Double](step.length) else zi.map(_ * order.head._4)
+      order.map { case (ch, i, d, _, len) =>
+        val z0 = z
+        val propagated = matVec(powers.getOrElseUpdate(len, matPow(step, len)), z0)
+        z = Array.tabulate(z0.length)(k => propagated(k) + d(k))
+        (ch, i) -> z0
+      }
+    }.toMap
+  }
+
+  /** The result frame (channel, t, v): `y(c)` at each chunk's t. */
+  private def samples(df: DataFrame, chunks: RDD[Chunk])(y: Chunk => Array[Double]): DataFrame =
+    df.sparkSession.createDataFrame(chunks.flatMap { c =>
+      val ys = y(c)
+      Iterator.tabulate(ys.length)(k => Sample(c.channel, c.t(k), ys(k)))
+    })
+
+  /** Distributed lfilter over (channel, t, v) with `chunk` rows per
+    * task from zero initial state: `IIR.lfilter` over each channel's
+    * (t, v)-sorted samples. Pass 1 runs now; the frame is pass 2.
+    */
+  def lfilterDistributed(df: DataFrame, b: Array[Double], a: Array[Double],
+                         chunk: Int = 1 << 20): DataFrame = {
+    val chunks = chunked(df, chunk)
+    val z = initialStates(chunks, b, a, reversed = false, zi = null)(_.v)
+    samples(df, chunks)(c => IIR.lfilterWithState(b, a, c.v, z((c.channel, c.i)))._1)
+  }
+
+  /** Chunk-parallel zero-phase filtering, scipy.signal.filtfilt(...,
+    * padtype=None): forward, then backward over the reversed output,
+    * each seeded with the steady state scaled by its first input (the
+    * padded variant is the per-channel `IIR.filtfilt`). Three passes
+    * over one chunking: the forward summaries; each chunk's forward
+    * re-filter with the backward summary of its reversed output (the
+    * last chunk's last forward sample seeds the backward steady state);
+    * the returned frame, forward then backward per chunk.
     */
   def filtfiltDistributed(df: DataFrame, b: Array[Double], a: Array[Double],
                           chunk: Int = 1 << 20): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val fwd = lfilterDistributed(df, b, a, chunk, ziFromFirst = true)
-    val rev = fwd.select(col("channel"), (-col("t")).as("t"), col("v"))
-    val bwd = lfilterDistributed(rev, b, a, chunk, ziFromFirst = true)
-    bwd.select(col("channel"), (-col("t")).as("t"), col("v"))
+    val zi = IIR.lfilterZi(b, a)
+    val chunks = chunked(df, chunk)
+    val zf = initialStates(chunks, b, a, reversed = false, zi)(_.v)
+    def reversedForward(c: Chunk): Array[Double] =
+      IIR.lfilterWithState(b, a, c.v, zf((c.channel, c.i)))._1.reverse
+    val zb = initialStates(chunks, b, a, reversed = true, zi)(reversedForward)
+    samples(df, chunks) { c =>
+      IIR.lfilterWithState(b, a, reversedForward(c), zb((c.channel, c.i)))._1.reverse
+    }
   }
 }

@@ -182,8 +182,9 @@ object KernelQueries {
          |       CAST(row_number() OVER (PARTITION BY channel ORDER BY t) - 1 AS DOUBLE)
          |         / 1000 AS t, v
          |FROM u""".stripMargin),
-    // %.4e: the chunked cogroup solve and the windowed prefix-sum
-    // diverge from the oracle's sequential replay at fp-roundoff
+    // %.4e: the whole-channel spline solve (one PerChannel gather) and
+    // the quadratic's windowed prefix sum are compared with the
+    // oracle's sequential replay at 5 significant digits
     QuerySpec("k_resample_cubic", (s, dir) =>
       Interp.resample(ev(s, dir), 1.0 / 1000.0, "cubic")
         .select(col("channel"), col("t"), format_string("%.4e", col("v")).as("v")),

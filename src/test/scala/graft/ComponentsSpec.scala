@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,9 +12,9 @@ import graft.datapipe.Dedup
   * distributed, or move to the driver mid-run; how many jobs a run
   * under the gate takes; and that a run releases what it persisted.
   */
-class ComponentsSpec extends AnyFunSuite {
+class ComponentsSpec extends AnyFunSuite with GraftSpark {
 
-  lazy val spark: SparkSession = GraftSession.local(4).newSession()
+  override lazy val spark: SparkSession = GraftSession.local(4).newSession()
 
   private def pairs(edges: Seq[(Long, Long)]): DataFrame = {
     val s = spark
@@ -66,28 +62,6 @@ class ComponentsSpec extends AnyFunSuite {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     edges.flatMap(e => Seq(e._1, e._2)).distinct.map(x => x -> find(x)).toMap
-  }
-
-  /** Jobs started while running `op`, counted on its job group. */
-  private def jobsOf(op: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${System.nanoTime()}"
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count")
-    try {
-      op
-      ListenerBusDrain(sc)
-      n.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
   }
 
   test("labels, member counts, rounds and schema agree at every node gate") {

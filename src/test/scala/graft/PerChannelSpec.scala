@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,9 +10,9 @@ import graft.signal.Signal
   * cubic resample): how many Spark jobs each runs, and how they fail a
   * variable-rate channel.
   */
-class PerChannelSpec extends AnyFunSuite {
+class PerChannelSpec extends AnyFunSuite with GraftSpark {
 
-  lazy val spark: SparkSession = GraftSession.local(4).newSession()
+  override lazy val spark: SparkSession = GraftSession.local(4).newSession()
 
   /** Three 100 Hz channels of unequal length. */
   private def frame(): DataFrame = {
@@ -27,30 +23,6 @@ class PerChannelSpec extends AnyFunSuite {
     }.toDF("channel", "t", "v")
   }
 
-  /** Jobs started by building `op` and collecting its result, counted
-    * by a listener on the job group.
-    */
-  private def jobsOf(op: => DataFrame): Int = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${System.nanoTime()}"
-    val n = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count")
-    try {
-      op.collect()
-      ListenerBusDrain(sc)
-      n.get()
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(l)
-    }
-  }
-
   test("Welch, mov_rms and cubic resample each run one channel gather") {
     val df = frame().cache()
     df.count()
@@ -58,9 +30,9 @@ class PerChannelSpec extends AnyFunSuite {
       // the gather shuffle (1) + the result (1); Welch's mean adds its
       // (channel, freq) aggregate. The multi-stage plans these replace
       // ran 6, 8 and 12 jobs on this frame.
-      assert(jobsOf(Psd.getPsd(df, windowLength = Some(1.0))) == 3)
-      assert(jobsOf(Signal(df).movRms(0.5).df) == 2)
-      assert(jobsOf(Interp.resample(df, 40.0, "cubic")) == 2)
+      assert(jobsOf(Psd.getPsd(df, windowLength = Some(1.0)).collect()) == 3)
+      assert(jobsOf(Signal(df).movRms(0.5).df.collect()) == 2)
+      assert(jobsOf(Interp.resample(df, 40.0, "cubic").collect()) == 2)
     } finally df.unpersist()
   }
 
